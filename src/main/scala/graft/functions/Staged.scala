@@ -11,8 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * an in-process engine: first request for a key computes + writes
   * parquet under a per-process temp dir, later requests read it. The
   * temp dir is per-JVM, so a fresh process always rebuilds from current
-  * inputs (no cross-run staleness), and keys embed a hash of the
-  * canonical data directory so distinct corpora can never collide.
+  * inputs (no cross-run staleness), and corpus keys ([[sfKey]]) embed
+  * the canonical data directory and a fingerprint of its files, so
+  * distinct corpora never collide and a rewritten table rebuilds
+  * within the process too.
   */
 object Staged {
 
@@ -132,14 +134,9 @@ object Staged {
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(stagedPath), new java.io.File(dest))
 
-  /** Input fingerprint for fixture keys: names + lengths + mtimes of a
-    * file or directory tree, folded into one hex token. Fixture
-    * builders whose SOURCE can be regenerated in-process (the
-    * compaction shatter, the insert-overwrite seed) fold this into
-    * their [[materializeDir]] key so a regenerated input for the same
-    * sf dir can never silently reuse a stale fixture against a fresh
-    * oracle (r12 ADVICE #4). */
-  def inputFingerprint(path: String): String = {
+  /** Input fingerprint: names + lengths + mtimes of a file or directory
+    * tree, folded into one hex token (part of every [[sfKey]]). */
+  private def inputFingerprint(path: String): String = {
     def walk(f: java.io.File): Iterator[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).iterator
@@ -153,12 +150,14 @@ object Staged {
     f"$h%016x"
   }
 
-  /** Corpus key piece: basename for readability PLUS a hash of the full
+  /** Corpus key piece: basename for readability, a hash of the full
     * canonical path — two data dirs that merely share a basename
-    * (…/a/sf0.01 vs …/b/sf0.01) must never collide. */
+    * (…/a/sf0.01 vs …/b/sf0.01) must never collide — and the
+    * [[inputFingerprint]] of the whole dir, so an artifact built before
+    * any of its tables was rewritten in-process is never served after. */
   def sfKey(sfDir: String): String = {
-    val canonical = new java.io.File(sfDir).getCanonicalPath
-    f"${new java.io.File(sfDir).getName}_${canonical.hashCode & 0xffffffffL}%08x"
+    val dir = new java.io.File(sfDir)
+    f"${dir.getName}_${dir.getCanonicalPath.hashCode & 0xffffffffL}%08x_${inputFingerprint(sfDir)}"
   }
 
   /** Test hook: drop all staged artifacts so a suite can measure or

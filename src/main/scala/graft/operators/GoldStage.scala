@@ -15,16 +15,16 @@ import graft.functions.Staged
   * broadcast dims) twice per bench pass. This stage is the missing DAG
   * edge, with the same mechanics as [[graft.functions.DedupStage]].
   *
-  * Plan-shape specs keep asserting on [[GoldFact.build]] directly (the
-  * builder is the operator; this is only its materialization), and
-  * [[PipelineRunner]] remains the user-facing materialize-to-a-chosen-
-  * directory path — this stage is the intra-process twin the query
-  * surface shares.
+  * This is the only place the fact is built: [[PipelineRunner]]'s
+  * `fct_trips` model writes this artifact (plus its audit column) to
+  * the chosen output directory, and the query surface and the quality
+  * suite read it. Plan-shape specs assert on [[GoldFact.build]]
+  * directly (the builder is the operator; this is its materialization).
   */
 object GoldStage {
 
-  /** The fact table, built once per (JVM, corpus) and read as parquet
-    * thereafter — projected to [[GoldFact.verifiedColumns]]: staging
+  /** The fact table, built once per (JVM, corpus state) and read as
+    * parquet thereafter (rewriting an input table changes the key) — projected to [[GoldFact.verifiedColumns]]: staging
     * the raw build would also write every join intermediate (~35 cols);
     * the artifact carries only the model's public surface. Column
     * pruning applies on read, so a consumer that needs 8 of the 22

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.current_timestamp
 
 /** The `dbt run` analog — the reference's main entry point (SURVEY §3
   * E1): a model DAG materialized in dependency order as tables.
@@ -16,28 +17,28 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the scheduler pool (the dbt `threads` analog — Spark's scheduler
   * interleaves their jobs; per-job parallelism is Spark tasks).
   *
-  * Downstream models read the MATERIALIZED table, not the upstream
-  * logical plan — same recompute-isolation dbt tables give (and at
-  * scale the reason to materialize silver once instead of re-deriving
-  * it inside every gold model).
+  * `fct_trips` is the staged fact ([[GoldStage.fact]]) plus its audit
+  * column: the one fact build per corpus that `dbt test`
+  * ([[Quality.report]]) also reads, so a run followed by the quality
+  * suite builds the join chain once. Its deps are lineage (the `ref()`
+  * edges): they order the run and close `--select` subsets.
   */
 object PipelineRunner {
 
   case class Model(name: String, deps: Seq[String],
-      build: (SparkSession, String, Map[String, DataFrame]) => DataFrame)
+      build: (SparkSession, String) => DataFrame)
 
-  /** The reference's six models. `tables` holds upstream
-    * materializations, keyed by model name. */
+  /** The reference's six models, each built from the corpus dir. */
   def models: Seq[Model] = Seq(
-    Model("stg_trips_unified", Nil, (s, sf, _) => Silver.build(s, sf)),
-    Model("dim_date", Nil, (s, _, _) => GoldDims.dimDate(s)),
-    Model("dim_zone", Nil, (s, sf, _) => GoldDims.dimZone(s, sf)),
-    Model("dim_payment_type", Nil, (s, _, _) => GoldDims.dimPaymentType(s)),
-    Model("dim_rate_code", Nil, (s, _, _) => GoldDims.dimRateCode(s)),
-    // fct depends on every upstream; built from the MATERIALIZED silver
+    Model("stg_trips_unified", Nil, Silver.build),
+    Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s)),
+    Model("dim_zone", Nil, GoldDims.dimZone),
+    Model("dim_payment_type", Nil, (s, _) => GoldDims.dimPaymentType(s)),
+    Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s)),
+    // F14: the audit column, nondeterministic, so not part of the staged fact
     Model("fct_trips",
       Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
-      (s, sf, t) => GoldFact.buildFrom(s, sf, t("stg_trips_unified"))))
+      (s, sf) => GoldStage.fact(s, sf).withColumn("dbt_loaded_at", current_timestamp())))
 
   /** Kahn topological order over the declared edges. */
   private[graft] def topoOrder(ms: Seq[Model]): Seq[Model] = {
@@ -85,12 +86,9 @@ object PipelineRunner {
     val ordered = topoOrder(ms)
     val done = scala.collection.concurrent.TrieMap[String, Future[DataFrame]]()
     ordered.foreach { m =>
-      val depFutures = m.deps.map(d => done(d))
-      done(m.name) = Future.sequence(depFutures).map { depDfs =>
-        val upstream = m.deps.zip(depDfs).toMap
-        val df = m.build(spark, sfDir, upstream)
+      done(m.name) = Future.sequence(m.deps.map(done)).map { _ =>
         val dir = s"$outRoot/${m.name}"
-        df.write.mode(SaveMode.Overwrite).parquet(dir)
+        m.build(spark, sfDir).write.mode(SaveMode.Overwrite).parquet(dir)
         spark.read.parquet(dir)
       }
     }

@@ -232,13 +232,9 @@ object Ingest {
       // the 64-file shattered input is a read-only FIXTURE (the
       // stream_dedup-landing pattern): built once per process; the
       // gated operation — the compaction rewrite itself — still reads
-      // it and writes the compacted table in full every run (r12).
-      // The key folds in the SOURCE file's fingerprint so an
-      // events.parquet regenerated in-process rebuilds the fixture
-      // (r13, r12 ADVICE #4)
+      // it and writes the compacted table in full every run (r12)
       val shattered = graft.functions.Staged.materializeDir(
-          s"compact_shatter_${graft.functions.Staged.sfKey(sfDir)}_${
-            graft.functions.Staged.inputFingerprint(s"$sfDir/events.parquet")}") { p =>
+          s"compact_shatter_${graft.functions.Staged.sfKey(sfDir)}") { p =>
         spark.read.schema(Tables.eventsRaw).parquet(s"$sfDir/events.parquet")
           .repartition(64)
           .write.parquet(p)
@@ -396,11 +392,9 @@ object Ingest {
       // the gated operation, the incremental dynamic-partition
       // overwrite against a stale table, still runs in full every run,
       // but the ~80-partition-dir setup write no longer dominates it
-      // (r12; the write-commit matrix was most of the 2.5 s gate).
-      // Keyed on the orders source fingerprint too (r13, ADVICE #4)
+      // (r12; the write-commit matrix was most of the 2.5 s gate)
       val seed = graft.functions.Staged.materializeDir(
-          s"iow_seed_${graft.functions.Staged.sfKey(sfDir)}_${
-            graft.functions.Staged.inputFingerprint(s"$sfDir/orders.parquet")}") { p =>
+          s"iow_seed_${graft.functions.Staged.sfKey(sfDir)}") { p =>
         monthlyOrderRevenue(orders.filter($"o_orderkey" % 7 =!= 0))
           .repartition(org.apache.spark.sql.functions.col("order_month"))
           .write.partitionBy("order_month").parquet(p)

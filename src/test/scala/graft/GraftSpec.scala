@@ -54,6 +54,17 @@ trait SparkSuite extends AnyFunSuite {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** `body` over a private copy of [[sf]], deleted afterwards: its
+    * staged artifacts are new to this JVM, and its tables may be
+    * rewritten. */
+  def withSfCopy[T](body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf_copy_").toFile
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(sf), dir)
+      body(dir.getPath)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   /** Session confs for the duration of `body`, previous values (set or
     * unset) restored after — the one copy of the snapshot/restore
     * dance the pressure/optimizer specs all need. */
@@ -128,17 +139,28 @@ class PipelineSpec extends SparkSuite {
 class PipelineRunnerSpec extends SparkSuite {
 
   test("dbt-run analog: DAG materializes in dependency order, replace semantics") {
-    val out = "/tmp/graft_pipeline_run"
-    val counts = PipelineRunner.run(spark, sf, out)
-    assert(counts("fct_trips") > 0)
-    assert(counts("dim_date") == 2557)
-    assert(counts.keySet == Set("stg_trips_unified", "dim_date", "dim_zone",
-      "dim_payment_type", "dim_rate_code", "fct_trips"))
-    // rerun = replace, not append
-    val counts2 = PipelineRunner.run(spark, sf, out)
-    assert(counts2 == counts)
-    // fct read back from the materialized table
-    assert(spark.read.parquet(s"$out/fct_trips").columns.contains("trip_id"))
+    // outside the corpus dir: a write under it would change its key
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_run").toString
+    try withSfCopy { dir =>
+      val factBuilds = () => graft.functions.Staged.buildTimes.keySet
+        .filter(_.startsWith("fct_trips_"))
+      val before = factBuilds()
+      val counts = PipelineRunner.run(spark, dir, out)
+      assert(counts("fct_trips") > 0)
+      assert(counts("dim_date") == 2557)
+      assert(counts.keySet == Set("stg_trips_unified", "dim_date", "dim_zone",
+        "dim_payment_type", "dim_rate_code", "fct_trips"))
+      // `dbt test` reads the fact `dbt run` built: one build for both
+      assert(Quality.report(spark, dir).collect().forall(_.getLong(1) == 0L))
+      assert((factBuilds() -- before).size == 1)
+      // rerun = replace, not append
+      val counts2 = PipelineRunner.run(spark, dir, out)
+      assert(counts2 == counts)
+      // fct read back from the materialized table: the model's public
+      // columns plus the audit column, no join intermediates
+      assert(spark.read.parquet(s"$out/fct_trips").columns.toSeq ==
+        GoldFact.verifiedColumns :+ "dbt_loaded_at")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("topo order puts fct last and respects declared deps") {
@@ -674,6 +696,22 @@ class StagedSpec extends SparkSuite {
       Future.sequence(List.fill(6)(Future(get().count()))), 60.seconds)
     assert(results.forall(_ == 2L))
     assert(builds == 1, s"artifact built $builds times under contention")
+  }
+
+  test("a rewritten input table rebuilds the staged fact in the same JVM") {
+    withSfCopy { dir =>
+      val before = GoldFact.fctTrips(spark, dir).count()
+      // re-ingest lineitem as a strict subset of its rows
+      val li = s"$dir/lineitem.parquet"
+      val subset = s"$dir/_lineitem_subset"
+      graft.sources.Tables.lineitem(spark, dir).filter(col("l_orderkey") % 2 === 0)
+        .write.parquet(subset)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(li))
+      org.apache.commons.io.FileUtils.moveDirectory(
+        new java.io.File(subset), new java.io.File(li))
+      val after = GoldFact.fctTrips(spark, dir).count()
+      assert(after < before, s"fact count $after after the rewrite, $before before")
+    }
   }
 }
 
