@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * seconds over SPARK_GRAFT_SF_DIR.
@@ -37,17 +36,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.muteSanctionedWindowWarns() // bounded-frame windows: see SCALE.md "Sanctioned global windows"
+    val spark = GraftSession.local()
 
     // warm-up: exercises scan + shuffle + codegen paths once, un-timed
     SparkEntry.entry(spark).count()
@@ -116,14 +105,15 @@ object Bench {
       if (sink == 42L || sink2 == 42L) println("") // defeat DCE
       dt
     }
-    // the parallel twin: cpus threads spinning at once. On an idle box
-    // with >= cpus free cores its wall time equals the single-thread
-    // constant; inflation HERE with a clean single-thread sentinel means
-    // the box has fewer free cores than the bench assumes (another
-    // tenant, cgroup quota) — exactly the contention that stretches
-    // 32-thread query stages but leaves one-core probes untouched.
+    // the parallel twin: one thread per session core, spinning at once.
+    // On an idle box with that many free cores its wall time equals the
+    // single-thread constant; inflation HERE with a clean single-thread
+    // sentinel means the box has fewer free cores than the bench assumes
+    // (another tenant, cgroup quota) — exactly the contention that
+    // stretches multi-thread query stages but leaves one-core probes
+    // untouched.
     def spinSentinelMt(): Double = {
-      val n = cpus.toInt
+      val n = spark.sparkContext.defaultParallelism
       val t0 = System.nanoTime()
       val threads = (1 to n).map { _ =>
         new Thread(() => { if (spin(400L * 1000 * 1000) == 42L) println("") })

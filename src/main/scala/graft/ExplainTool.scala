@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool (not part of the driver contract): print the formatted
   * physical plan of named registered queries — the `.explain` audit the
   * scale discipline requires after every operator change. */
 object ExplainTool {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.autoBroadcastJoinThreshold", 10485760)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val d = "/root/testdata/sf0.01"
     // stage-build frames (not registered queries): explain the BUILD
     // plan the staged artifact pays, which consumer queries never show

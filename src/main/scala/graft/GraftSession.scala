@@ -2,18 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Entry point for library users: a SparkSession tuned the way every
-  * graft module expects, with the custom SQL functions registered.
+/** The one place a graft SparkSession is configured. Every main
+  * (`Bench`, `Verify`, `Quality`, `Probe`, `ExplainTool`, `ScaleSoak`),
+  * perfbench and the test suite's shared session build it through
+  * [[local]], so the oracle gate, the benchmark and the tests run under
+  * the same settings (shuffle partitions = cores, AQE on, small
+  * maxPartitionBytes for single-file test inputs, UTC, the graft SQL
+  * functions registered).
   *
-  * Local mode defaults mirror Verify/Bench (shuffle partitions = cores,
-  * AQE on, small maxPartitionBytes for single-file test inputs, UTC).
-  * On a real cluster, build your own session — then only
-  * [[configure]] matters: it registers the SQL functions and applies
-  * the settings that are scale-independent (UTC, AQE).
+  * On a real cluster, build your own session — then only [[configure]]
+  * matters: it registers the SQL functions and applies the settings
+  * that are scale-independent (UTC, AQE).
   */
 object GraftSession {
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  /** A `local[cores]` session; `cores` defaults to `SPARK_GRAFT_CPUS`,
+    * else 4. Also sets the WARN log level and mutes the sanctioned
+    * window warnings. */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt),
       appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -25,6 +31,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     configure(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    // bounded-frame windows: see SCALE.md "Sanctioned global windows"
+    muteSanctionedWindowWarns()
     spark
   }
 

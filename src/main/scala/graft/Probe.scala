@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (not part of the driver contract): run named registered
   * queries once (noop-sink semantics via count over the final frame is
@@ -14,17 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.muteSanctionedWindowWarns()
+    val spark = GraftSession.local()
     SparkEntry.entry(spark).count() // warm-up, untimed
 
     def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {

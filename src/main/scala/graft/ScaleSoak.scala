@@ -96,7 +96,6 @@ object ScaleSoak {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // subset filter for incremental soaks (same contract as Bench's
     // SPARK_GRAFT_BENCH_ONLY): replication dirs are reused, so soaking
     // only the queries added since the last full run is cheap
@@ -110,16 +109,7 @@ object ScaleSoak {
     }
     val mults = args.headOption.getOrElse("1,4,16")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.muteSanctionedWindowWarns() // bounded-frame windows: see SCALE.md "Sanctioned global windows"
+    val spark = GraftSession.local()
 
     // un-timed warm-up circuit at the smallest multiplier: the first
     // execution of each query shape absorbs session/codegen/JIT

@@ -78,7 +78,10 @@ object PipelineRunner {
     runModels(spark, sfDir, outRoot, models.filter(m => selected.contains(m.name)))
   }
 
-  private def runModels(spark: SparkSession, sfDir: String, outRoot: String,
+  /** Every model's future settles before anything is rethrown (a
+    * fail-fast wait would leave siblings writing after `run` threw);
+    * then the first failure in topological order propagates. */
+  private[graft] def runModels(spark: SparkSession, sfDir: String, outRoot: String,
       ms: Seq[Model]): Map[String, Long] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -92,6 +95,7 @@ object PipelineRunner {
         spark.read.parquet(dir)
       }
     }
+    ordered.foreach(m => Await.ready(done(m.name), Duration.Inf))
     ordered.map { m =>
       m.name -> Await.result(done(m.name), Duration.Inf).count()
     }.toMap

@@ -62,54 +62,31 @@ object GraftFunctions {
   private val ddsketchBinTemplate: String =
     s"cast(ceil(ln(cast(__arg as double)) / ${java.lang.Double.toString(graft.functions.DdSketch.LnGamma)}D) as int)"
 
-  /** Shared by both registration paths. */
-  private[plans] val sketchBuilders: Map[String, Seq[Expression] => Expression] =
-    Map("hll_sketch" -> (sqlMacro(hllSketchTemplate) _),
-      "ddsketch_bin" -> (sqlMacro(ddsketchBinTemplate) _))
-
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    ("dot_product", es => DotProduct(es(0), es(1))),
-    ("minhash_sig", es => MinHashSignature(es.head, 64)),
-    ("sorted_intersect_size", es => SortedIntersectSize(es(0), es(1))),
-    ("sorted_shingles", es => SortedShingles(es.head)),
-    ("ngrams", NGrams.fromSql _),
-    ("blocklist_counts", BlocklistCounts.fromSql _),
-    ("hll_sketch", sketchBuilders("hll_sketch")),
-    ("ddsketch_bin", sketchBuilders("ddsketch_bin")))
+  /** The graft SQL functions, shared by both registration paths:
+    * name, the class its `ExpressionInfo` names, builder. */
+  private[graft] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_product", classOf[DotProduct], es => DotProduct(es(0), es(1))),
+    ("minhash_sig", classOf[MinHashSignature], es => MinHashSignature(es.head, 64)),
+    ("sorted_intersect_size", classOf[SortedIntersectSize],
+      es => SortedIntersectSize(es(0), es(1))),
+    ("sorted_shingles", classOf[SortedShingles], es => SortedShingles(es.head)),
+    ("ngrams", classOf[NGrams], NGrams.fromSql _),
+    ("blocklist_counts", classOf[BlocklistCounts], BlocklistCounts.fromSql _),
+    ("hll_sketch", graft.functions.Hll.getClass, sqlMacro(hllSketchTemplate) _),
+    ("ddsketch_bin", graft.functions.DdSketch.getClass, sqlMacro(ddsketchBinTemplate) _))
 
   /** Register as session temp functions (idempotent). */
   def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, builder) =>
+    fns.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      es => DotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      es => MinHashSignature(es.head, 64)))
-    e.injectFunction((FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-      es => SortedIntersectSize(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("sorted_shingles"),
-      new ExpressionInfo(classOf[SortedShingles].getName, "sorted_shingles"),
-      es => SortedShingles(es.head)))
-    e.injectFunction((FunctionIdentifier("ngrams"),
-      new ExpressionInfo(classOf[NGrams].getName, "ngrams"),
-      NGrams.fromSql _))
-    e.injectFunction((FunctionIdentifier("blocklist_counts"),
-      new ExpressionInfo(classOf[BlocklistCounts].getName, "blocklist_counts"),
-      BlocklistCounts.fromSql _))
-    e.injectFunction((FunctionIdentifier("hll_sketch"),
-      new ExpressionInfo(graft.functions.Hll.getClass.getName, "hll_sketch"),
-      GraftFunctions.sketchBuilders("hll_sketch")))
-    e.injectFunction((FunctionIdentifier("ddsketch_bin"),
-      new ExpressionInfo(graft.functions.DdSketch.getClass.getName, "ddsketch_bin"),
-      GraftFunctions.sketchBuilders("ddsketch_bin")))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.fns.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }

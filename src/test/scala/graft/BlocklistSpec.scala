@@ -74,7 +74,6 @@ class BlocklistSpec extends SparkSuite {
   }
 
   test("SQL surface: blocklist_counts registered and matching the Column API") {
-    graft.plans.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT blocklist_counts('scan a can', array('a','an','can','scan')) AS c")
       .collect().head.getAs[scala.collection.Seq[Long]]("c")

@@ -1,0 +1,28 @@
+package graft
+
+/** The test suite runs under the session every main builds. */
+class GraftSessionSpec extends SparkSuite {
+
+  test("the shared test session has the settings GraftSession.local applies") {
+    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == "8m")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.catalog.functionExists("dot_product"))
+  }
+
+  test("no src/main file but GraftSession.scala builds a SparkSession") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val sources = files(root).filter(_.getName.endsWith(".scala"))
+    assert(sources.exists(_.getName == "GraftSession.scala"))
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val offenders = sources.filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      f.getName != "GraftSession.scala" && builder.findFirstIn(src).isDefined
+    }
+    assert(offenders.isEmpty, offenders.mkString("build sessions with GraftSession.local: ", ", ", ""))
+  }
+}

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 import graft.functions.{Dedup, Multimodal, Similarity, TextAnalysis}
 
-/** Shared session: one per suite, local[4], UTC, small shuffle count. */
+/** Shared session: the one every main builds ([[GraftSession.local]]),
+  * at local[4]. */
 trait SparkSuite extends AnyFunSuite {
 
   /** AQE/QueryStage-aware physical-plan walk (executes the frame first
@@ -41,17 +42,7 @@ trait SparkSuite extends AnyFunSuite {
     walk(root)
     out.toSeq
   }
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // bounded-frame windows: see SCALE.md "Sanctioned global windows"
-    GraftSession.muteSanctionedWindowWarns()
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 
   /** `body` over a private copy of [[sf]], deleted afterwards: its
@@ -163,6 +154,19 @@ class PipelineRunnerSpec extends SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("a failing model throws only after its siblings finish writing") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_fail").toString
+    try {
+      val ms = Seq(
+        PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom")),
+        PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }))
+      val e = intercept[RuntimeException](PipelineRunner.runModels(spark, sf, out, ms))
+      assert(e.getMessage == "boom")
+      assert(new java.io.File(s"$out/slow/_SUCCESS").exists(),
+        "run threw while a sibling model was still writing")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("topo order puts fct last and respects declared deps") {
     val order = PipelineRunner.topoOrder(PipelineRunner.models).map(_.name)
     assert(order.last == "fct_trips")
@@ -243,8 +247,7 @@ class DedupSpec extends SparkSuite {
     assert(fused.exceptAll(hof).count() == 0)
     assert(hof.exceptAll(fused).count() == 0)
     assert(fused.count() == 500)
-    // and via spark.sql after registration
-    graft.plans.GraftFunctions.register(spark)
+    // and via spark.sql (the session registers the SQL functions)
     val viaSql = spark.sql("SELECT sorted_shingles(array('a','b','c','a','b','c','x')) AS sh")
       .collect().head.getSeq[String](0)
     assert(viaSql == Seq("a b c", "b c a", "b c x", "c a b").sorted)

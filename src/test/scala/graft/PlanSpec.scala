@@ -450,7 +450,6 @@ class AsOfExecSpec extends SparkSuite {
 class SqlSurfaceSpec extends SparkSuite {
 
   test("custom expressions callable from spark.sql after registration") {
-    graft.plans.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
         "sorted_intersect_size(array('a','b','c'), array('b','c','d')) AS i, " +
@@ -461,7 +460,6 @@ class SqlSurfaceSpec extends SparkSuite {
   }
 
   test("sketch scalars callable from spark.sql: hll_sketch and ddsketch_bin") {
-    graft.plans.GraftFunctions.register(spark)
     // hll_sketch: coordinates match the Scala sketch math exactly
     val s = spark.sql(
       "SELECT hll_sketch('abc').reg AS reg, hll_sketch('abc').rho AS rho")
@@ -493,16 +491,29 @@ class SqlSurfaceSpec extends SparkSuite {
   }
 
   test("GraftExtensions injects functions at session build") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    // note: getOrCreate may return the existing session; extensions
-    // still apply to a fresh builder in isolation — assert via registry
-    graft.plans.GraftFunctions.register(s2)
-    assert(s2.sql("SELECT dot_product(array(1.0D), array(2.0D))")
-      .collect().head.getDouble(0) == 2.0)
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    spark // the shared session (and its SparkContext) exists first
+    // getOrCreate would return the shared session, whose functions come
+    // from `register`; with the active and default sessions cleared it
+    // builds a fresh one, and only the extensions can add them there
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .withExtensions(new graft.plans.GraftExtensions)
+        .getOrCreate()
+      assert(s2 ne spark)
+      // not stopped: it shares the SparkContext with the shared session
+      val injected = s2.sessionState.functionRegistry.listFunction().map(_.funcName).toSet --
+        FunctionRegistry.builtin.listFunction().map(_.funcName)
+      assert(injected == graft.plans.GraftFunctions.fns.map(_._1).toSet)
+      assert(s2.sql("SELECT dot_product(array(1.0D), array(2.0D))")
+        .collect().head.getDouble(0) == 2.0)
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
   }
 }
 

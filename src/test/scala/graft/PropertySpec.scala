@@ -71,8 +71,7 @@ class PropertySpec extends SparkSuite {
         .collect().head.getSeq[String](0)
       assert(distinctG == hofPositional.distinct, s"n=$n toks=${toks.toList}")
     }
-    // SQL surface: registered via GraftFunctions
-    graft.plans.GraftFunctions.register(spark)
+    // SQL surface: the session registers the graft functions
     val viaSql = spark.sql(
       "SELECT ngrams(array('a','b','a','b'), 2, true) AS g")
       .collect().head.getSeq[String](0)
