@@ -345,26 +345,13 @@ object QualityModel {
   def prebuild(spark: SparkSession, sfDir: String): Unit = {
     // the two fits (full corpus / train split) are independent GD loops
     // whose rounds are latency-, not throughput-, bound (each is a
-    // map-only job over ~8 small partitions on a 32-core box) — overlap
-    // them as concurrent driver jobs (guide §2.6: concurrent jobs
-    // back-fill idle executors; [[Staged]] locks per key). The shared
-    // pack is built ONCE up front so the two fits don't both pay a
-    // wait on the same cell. Futures + Await, not raw Threads: a
-    // builder failure must propagate to the caller, not vanish in an
-    // uncaught-exception handler and silently re-run serially
-    // (r12 ADVICE #2).
+    // map-only job over ~8 small partitions) — overlap them as concurrent
+    // jobs ([[Staged]] locks per key). The shared pack is built ONCE up
+    // front so the two fits don't both wait on the same cell.
     packed(spark, sfDir)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      Await.result(Future.sequence(Seq(
-        Future { trainAndScore(spark, sfDir).count(); () },
-        Future { evalHoldout(spark, sfDir).count(); () })), 10.minutes)
-    } finally { pool.shutdown() }
-    ()
+    graft.Concurrent.all(spark, Seq(
+      "trainAndScore" -> (() => trainAndScore(spark, sfDir).count()),
+      "evalHoldout" -> (() => evalHoldout(spark, sfDir).count())))
   }
 
   /** Train T rounds and score the corpus: (doc_id, label,

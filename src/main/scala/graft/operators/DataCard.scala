@@ -157,29 +157,14 @@ object DataCard {
       "quality_auc", lit("holdout"),
       "n_pos" -> $"n_pos", "n_neg" -> $"n_neg", "u2" -> $"u2",
       "auc_e9" -> floor($"auc" * lit(1e9)))
-    // r12 optimization (guide §2.6 — overlap independent jobs): the 11
-    // sections are independent audits; composed into one plan they ran
-    // as ~90 tiny sequential stages (6.5 s wall for a 247-row report at
-    // sf0.1), and even section CONSTRUCTION is non-trivial (each builds
-    // a full component plan; the quality sections eagerly read the
-    // staged weights). Construct + evaluate the sections as CONCURRENT
-    // jobs (the `def`s above delay construction into the pool) and
-    // union the pinned results — same rows, same oracle; wall time
-    // becomes ~max(section), not Σ(sections). Pinning routes through
-    // checkpointAudited so a global window can never hide behind the
-    // truncation. r13: the quality_auc section — the one global-window
-    // carrier, previously left inline so the per-query audit could see
-    // its window, which kept its whole subtree (holdout scoring over
-    // the staged weights, ~3.4 s residual) SEQUENTIAL after the pool
-    // drained — joins the pool behind the catalogued checkpoint site
-    // "dataCard.quality_auc" (WindowAudit.SanctionedCheckpointSites;
-    // the card's own plan is sanctioned for zero windows again).
-    //
-    // NOTE dataCard is EAGER at construction: the pool executes all 11
-    // section jobs before this method returns (plan-only consumers pay
-    // full evaluation). The Await is bounded — one hung section fails
-    // the card after 10 minutes instead of blocking the caller forever
-    // (r12 ADVICE #3).
+    // The 11 sections are independent audits: composed into one plan
+    // they ran as ~90 tiny sequential stages (6.5 s for a 247-row report
+    // at sf0.1). So they are built (the `def`s above) and evaluated as
+    // concurrent jobs, each pinned through checkpointAudited so a global
+    // window cannot hide behind the truncation; quality_auc, the one
+    // global-window carrier, is pinned at the catalogued site
+    // "dataCard.quality_auc" (WindowAudit.SanctionedCheckpointSites).
+    // dataCard is therefore eager: every section runs before it returns.
     val sections = Seq[(String, () => DataFrame)](
       "mixture" -> (() => mix), "dedup_funnel" -> (() => funnel),
       "contamination" -> (() => contam), "lang_id" -> (() => lang),
@@ -188,21 +173,9 @@ object DataCard {
       "contamination_fuzzy" -> (() => fuzzy),
       "quality_calibration" -> (() => cal),
       "quality_auc" -> (() => auc))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(sections.size)
-    val pinned =
-      try {
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        Await.result(
-          Future.sequence(sections.map { case (name, build) =>
-            Future(graft.plans.WindowAudit
-              .checkpointAudited(s"dataCard.$name", build()))
-          }), 10.minutes)
-      } finally { pool.shutdown() }
-    pinned.reduce(_.unionByName(_))
-      .orderBy($"section", $"item", $"metric")
+    graft.Concurrent.all(spark, sections.map { case (name, build) =>
+      name -> (() => graft.plans.WindowAudit.checkpointAudited(s"dataCard.$name", build()))
+    }).reduce(_.unionByName(_)).orderBy($"section", $"item", $"metric")
   }
 
   /** The same composition in SQL: each component's published oracle as

@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions.current_timestamp
   *
   * Spark shape: each model is a `DataFrame`-producing function; deps are
   * an explicit edge list; materialization is an overwrite parquet write
-  * + re-read (the "table"). Independent models launch concurrently on
-  * the scheduler pool (the dbt `threads` analog — Spark's scheduler
-  * interleaves their jobs; per-job parallelism is Spark tasks).
+  * + re-read (the "table"). The DAG runs in dependency-depth waves
+  * (roots, then `fct_trips`), each one [[graft.Concurrent.all]] call
+  * (the dbt `threads` analog): a failing model fails its wave, named,
+  * once its siblings settle, and the later waves (its dependents) are
+  * skipped.
   *
   * `fct_trips` is the staged fact ([[GoldStage.fact]]) plus its audit
   * column: the one fact build per corpus that `dbt test`
@@ -40,19 +42,15 @@ object PipelineRunner {
       Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
       (s, sf) => GoldStage.fact(s, sf).withColumn("dbt_loaded_at", current_timestamp())))
 
-  /** Kahn topological order over the declared edges. */
-  private[graft] def topoOrder(ms: Seq[Model]): Seq[Model] = {
+  /** The models in dependency-depth waves, roots first: a model's depth
+    * is one more than its deepest dep's. A cycle fails loudly. */
+  private[graft] def waves(ms: Seq[Model]): Seq[Seq[Model]] = {
     val byName = ms.map(m => m.name -> m).toMap
-    val resolved = scala.collection.mutable.LinkedHashSet[String]()
-    def visit(m: Model, path: Set[String]): Unit = {
+    def depth(m: Model, path: Set[String]): Int = {
       require(!path.contains(m.name), s"cycle at ${m.name}")
-      if (!resolved.contains(m.name)) {
-        m.deps.foreach(d => visit(byName(d), path + m.name))
-        resolved += m.name
-      }
+      m.deps.map(d => depth(byName(d), path + m.name) + 1).maxOption.getOrElse(0)
     }
-    ms.foreach(visit(_, Set.empty))
-    resolved.toSeq.map(byName)
+    ms.groupBy(depth(_, Set.empty)).toSeq.sortBy(_._1).map(_._2)
   }
 
   /** Run the DAG: independent roots concurrently, dependents after
@@ -78,26 +76,15 @@ object PipelineRunner {
     runModels(spark, sfDir, outRoot, models.filter(m => selected.contains(m.name)))
   }
 
-  /** Every model's future settles before anything is rethrown (a
-    * fail-fast wait would leave siblings writing after `run` threw);
-    * then the first failure in topological order propagates. */
+  /** One [[graft.Concurrent.all]] per wave; a failed wave stops the
+    * later ones. Model -> materialized row count. */
   private[graft] def runModels(spark: SparkSession, sfDir: String, outRoot: String,
-      ms: Seq[Model]): Map[String, Long] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ordered = topoOrder(ms)
-    val done = scala.collection.concurrent.TrieMap[String, Future[DataFrame]]()
-    ordered.foreach { m =>
-      done(m.name) = Future.sequence(m.deps.map(done)).map { _ =>
+      ms: Seq[Model]): Map[String, Long] =
+    waves(ms).flatMap { wave =>
+      graft.Concurrent.all(spark, wave.map { m => m.name -> { () =>
         val dir = s"$outRoot/${m.name}"
         m.build(spark, sfDir).write.mode(SaveMode.Overwrite).parquet(dir)
-        spark.read.parquet(dir)
-      }
-    }
-    ordered.foreach(m => Await.ready(done(m.name), Duration.Inf))
-    ordered.map { m =>
-      m.name -> Await.result(done(m.name), Duration.Inf).count()
+        m.name -> spark.read.parquet(dir).count()
+      }})
     }.toMap
-  }
 }

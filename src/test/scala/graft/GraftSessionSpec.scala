@@ -11,18 +11,28 @@ class GraftSessionSpec extends SparkSuite {
     assert(spark.catalog.functionExists("dot_product"))
   }
 
-  test("no src/main file but GraftSession.scala builds a SparkSession") {
+  /** Paths of the `src/main/scala` files, `owner` aside, that match `pattern`. */
+  private def offenders(owner: String, pattern: String): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, root.getAbsolutePath)
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
     val sources = files(root).filter(_.getName.endsWith(".scala"))
-    assert(sources.exists(_.getName == "GraftSession.scala"))
-    val builder = """SparkSession\s*\.\s*builder""".r
-    val offenders = sources.filter { f =>
+    assert(sources.exists(_.getName == owner))
+    sources.filter { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      f.getName != "GraftSession.scala" && builder.findFirstIn(src).isDefined
-    }
-    assert(offenders.isEmpty, offenders.mkString("build sessions with GraftSession.local: ", ", ", ""))
+      f.getName != owner && pattern.r.findFirstIn(src).isDefined
+    }.map(_.getPath)
+  }
+
+  test("no src/main file but GraftSession.scala builds a SparkSession") {
+    val bad = offenders("GraftSession.scala", """SparkSession\s*\.\s*builder""")
+    assert(bad.isEmpty, bad.mkString("build sessions with GraftSession.local: ", ", ", ""))
+  }
+
+  test("no src/main file but Concurrent.scala makes a pool or waits on futures") {
+    val bad = offenders("Concurrent.scala",
+      """Await\.|Future\.sequence|Executors\.new|ExecutionContext""")
+    assert(bad.isEmpty, bad.mkString("run concurrent work with Concurrent.all: ", ", ", ""))
   }
 }

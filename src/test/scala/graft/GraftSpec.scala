@@ -56,6 +56,39 @@ trait SparkSuite extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  /** Four partitions that each sleep 60 s: a Spark job that only
+    * cancellation ends early. */
+  def sleepyFrame(s: SparkSession): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    s.range(0, 4, 1, 4).mapPartitions { it => Thread.sleep(60000); it }.toDF()
+  }
+
+  /** Runs `call` on its own thread and interrupts that thread once a
+    * Spark job is active. Asserts that `call` gives up within 5 s, that
+    * no Spark job is left running 10 s later, and that the failure
+    * names `task`. */
+  def assertInterruptCancels(task: String)(call: => Any): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val caller = new Thread(() => try { call; () } catch { case e: Throwable => failure.set(e) })
+    caller.start()
+    try {
+      val deadline = System.nanoTime + 30L * 1000000000
+      while (tracker.getActiveJobIds.isEmpty && System.nanoTime < deadline) Thread.sleep(50)
+      assert(tracker.getActiveJobIds.nonEmpty, "the long job never started")
+      val interrupted = System.nanoTime
+      caller.interrupt()
+      caller.join(10000)
+      assert(!caller.isAlive && System.nanoTime - interrupted < 5L * 1000000000,
+        "the call did not give up within 5 s of the interrupt")
+      val idle = System.nanoTime + 10L * 1000000000
+      while (tracker.getActiveJobIds.nonEmpty && System.nanoTime < idle) Thread.sleep(100)
+      assert(tracker.getActiveJobIds.isEmpty, "the long job outlived its caller")
+      assert(failure.get != null && String.valueOf(failure.get.getMessage).contains(task),
+        s"failure does not name $task: ${failure.get}")
+    } finally spark.sparkContext.cancelAllJobs()
+  }
+
   /** Session confs for the duration of `body`, previous values (set or
     * unset) restored after — the one copy of the snapshot/restore
     * dance the pressure/optimizer specs all need. */
@@ -161,16 +194,24 @@ class PipelineRunnerSpec extends SparkSuite {
         PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom")),
         PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }))
       val e = intercept[RuntimeException](PipelineRunner.runModels(spark, sf, out, ms))
-      assert(e.getMessage == "boom")
+      assert(e.getMessage == "boom: boom" && e.getCause.getMessage == "boom")
       assert(new java.io.File(s"$out/slow/_SUCCESS").exists(),
         "run threw while a sibling model was still writing")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("an interrupted run cancels its models' Spark jobs") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_cancel").toString
+    try assertInterruptCancels("sleepy") {
+      PipelineRunner.runModels(spark, sf, out,
+        Seq(PipelineRunner.Model("sleepy", Nil, (s, _) => sleepyFrame(s))))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("topo order puts fct last and respects declared deps") {
-    val order = PipelineRunner.topoOrder(PipelineRunner.models).map(_.name)
-    assert(order.last == "fct_trips")
-    assert(order.indexOf("stg_trips_unified") < order.indexOf("fct_trips"))
+    assert(PipelineRunner.waves(PipelineRunner.models).map(_.map(_.name)) == Seq(
+      Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
+      Seq("fct_trips")))
   }
 }
 
