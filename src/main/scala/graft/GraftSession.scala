@@ -10,6 +10,11 @@ import org.apache.spark.sql.SparkSession
   * maxPartitionBytes for single-file test inputs, UTC, the graft SQL
   * functions registered).
   *
+  * It also sizes Spark's codegen cache, a static setting only a session
+  * build can set: at Spark's default of 100 entries, a refresh pass
+  * (~200 generated classes) and the 7 reference queries (~105) evicted
+  * classes they needed again, so every pass recompiled them, cold in the JIT.
+  *
   * On a real cluster, build your own session — then only [[configure]]
   * matters: it registers the SQL functions and applies the settings
   * that are scale-independent (UTC, AQE).
@@ -29,6 +34,8 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // 256 of 256/512/1000 tried: a refresh pass compiles 8 classes, not 200; a dashboard block 0, not 42
+      .config("spark.sql.codegen.cache.maxEntries", "256")
       .getOrCreate()
     configure(spark)
     spark.sparkContext.setLogLevel("WARN")

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * Each check family maps to a DataFrame pattern (SURVEY §2):
   *  - `not_null`           → conditional-sum over one scan
   *  - `unique` (A9)        → groupBy(key).count.filter(count > 1)
-  *  - `relationships` (J5) → LEFT ANTI join fact→dim (broadcast)
+  *  - `relationships` (J5) → conditional-sum of `fk IS NOT NULL AND NOT
+  *    resolves`, `resolves` an existence join fact→dim (broadcast)
   *  - `accepted_values` (A10) → conditional-sum (non-null, out-of-domain)
   *
   * The report is one row per check with its violation count — asserted
@@ -35,9 +36,11 @@ import org.apache.spark.sql.functions._
   * (violation *counts* are deterministic; violating *rows* may not be).
   *
   * Scale: all same-table checks share ONE scan via conditional
-  * aggregation (silver's 8 checks = one pass; the fact's 9 non-FK checks
-  * = one pass over a 8-column cached projection); each relationship is a
-  * broadcast anti-join — no fact-sized shuffles anywhere.
+  * aggregation. Silver's 8 checks are one pass; the fact's 13 checks
+  * ([[factChecks]]) are one pass over the materialized fact (parquet
+  * prunes it to the 8 columns they touch), its 4 relationships broadcast
+  * existence joins inside that pass — the fact is read once, with no
+  * fact-sized shuffle.
   */
 object Quality {
 
@@ -74,6 +77,38 @@ object Quality {
         ") as (check_name, violations)")
   }
 
+  /** The fact's 13 checks — 8 not_null, 1 accepted_values and the 4
+    * relationships — in ONE pass over `fact`. Each FK projects a
+    * boolean "resolves" column, an existence join against its dim key
+    * (never a left join: a duplicated dim key cannot multiply fact
+    * rows), counted as `fk IS NOT NULL AND NOT resolves`. A NULL FK is
+    * the not_null test's violation, not a relationships one: dbt's
+    * `relationships` test filters `where <fk> is not null`. */
+  private[graft] def factChecks(fact: DataFrame, dimDate: DataFrame,
+      dimZone: DataFrame): DataFrame = {
+    // relationships ×4 (J5): both date SKs resolve in dim_date, both
+    // zone SKs in dim_zone — the reference's exact same-dim-twice shape
+    val fks = Seq(
+      ("pickup_date_sk", dimDate, "date_sk"),
+      ("dropoff_date_sk", dimDate, "date_sk"),
+      ("pickup_zone_sk", dimZone, "zone_sk"),
+      ("dropoff_zone_sk", dimZone, "zone_sk"))
+    val nnCols = Seq("trip_id", "service_type", "pickup_date_sk",
+      "dropoff_date_sk", "pickup_zone_sk", "dropoff_zone_sk",
+      "quantity", "extended_price")
+    val resolved = fks.foldLeft(fact) {
+      case (df, (fk, dim, key)) => df.withColumn(s"${fk}_resolves",
+        dim.select(col(key)).where(col(key) === col(fk).outer()).exists())
+    }
+    condChecks(resolved,
+      nnCols.map(c => s"not_null_fct_$c" -> col(c).isNull) ++
+        Seq("accepted_values_fct_service_type" ->
+          !col("service_type").isin("yellow", "green")) ++
+        fks.map { case (fk, _, _) =>
+          s"relationships_fct_$fk" -> (col(fk).isNotNull && !col(s"${fk}_resolves"))
+        })
+  }
+
   /** One row per check: (check_name, violations) — 32 rows, sorted. */
   def report(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -82,13 +117,6 @@ object Quality {
       df.groupBy(col(key)).agg(count(lit(1)).as("n"))
         .filter($"n" > 1)
         .agg(coalesce(count(lit(1)), lit(0L)).as("violations"))
-        .select(lit(name).as("check_name"), $"violations")
-
-    def fkCheck(child: DataFrame, fk: String, dim: DataFrame, dimKey: String,
-        name: String): DataFrame =
-      child.select(col(fk)).join(broadcast(dim.select(col(dimKey))),
-          col(fk) === col(dimKey), "left_anti")
-        .agg(count(lit(1)).as("violations"))
         .select(lit(name).as("check_name"), $"violations")
 
     // ---- silver staging: 7 not_null + 1 accepted_values, ONE pass ----
@@ -102,35 +130,14 @@ object Quality {
         ("accepted_values_silver_service_type" ->
           !$"service_type".isin("yellow", "green")))
 
-    // ---- fct_trips: 8 not_null + 1 accepted_values + 4 relationships --
-    // the fact feeds 5 independent consumers (one conditional-agg pass +
-    // four FK anti-joins): read the MATERIALIZED fact table, projected
-    // to only the 8 columns the checks touch (parquet column pruning) —
-    // exactly how dbt test runs against the materialized model rather
-    // than re-deriving the join chain per test
-    val fact = GoldStage.fact(spark, sfDir)
-      .select("trip_id", "service_type", "pickup_date_sk", "dropoff_date_sk",
-        "pickup_zone_sk", "dropoff_zone_sk", "quantity", "extended_price")
-    val factNnCols = Seq("trip_id", "service_type", "pickup_date_sk",
-      "dropoff_date_sk", "pickup_zone_sk", "dropoff_zone_sk",
-      "quantity", "extended_price")
-    val factChecks = condChecks(fact,
-      factNnCols.map(c => s"not_null_fct_$c" -> col(c).isNull) :+
-        ("accepted_values_fct_service_type" ->
-          !$"service_type".isin("yellow", "green")))
-
     val dimZone = GoldDims.dimZone(spark, sfDir)
     val dimDate = GoldDims.dimDate(spark)
     val dimPayment = GoldDims.dimPaymentType(spark)
     val dimRate = GoldDims.dimRateCode(spark)
 
-    // relationships ×4 (J5): both date SKs resolve in dim_date, both
-    // zone SKs in dim_zone — the reference's exact same-dim-twice shape
-    val fks =
-      fkCheck(fact, "pickup_date_sk", dimDate, "date_sk", "relationships_fct_pickup_date_sk")
-        .unionByName(fkCheck(fact, "dropoff_date_sk", dimDate, "date_sk", "relationships_fct_dropoff_date_sk"))
-        .unionByName(fkCheck(fact, "pickup_zone_sk", dimZone, "zone_sk", "relationships_fct_pickup_zone_sk"))
-        .unionByName(fkCheck(fact, "dropoff_zone_sk", dimZone, "zone_sk", "relationships_fct_dropoff_zone_sk"))
+    // the materialized fact, exactly how dbt test runs against the
+    // model's table rather than re-deriving the join chain per test
+    val fact = factChecks(GoldStage.fact(spark, sfDir), dimDate, dimZone)
 
     // ---- dims: not_null batched per dim (one tiny pass), unique ×5 ----
     val dimNn =
@@ -153,8 +160,8 @@ object Quality {
         .unionByName(uniqueCheck(dimRate, "priority_code", "unique_dim_rate_code_priority_code"))
 
     silverChecks.select($"check_name", $"violations".cast("long"))
-      .unionByName(factChecks.select($"check_name", $"violations".cast("long")))
-      .unionByName(fks).unionByName(dimNn.select($"check_name", $"violations".cast("long")))
+      .unionByName(fact.select($"check_name", $"violations".cast("long")))
+      .unionByName(dimNn.select($"check_name", $"violations".cast("long")))
       .unionByName(uniques)
       .orderBy($"check_name")
   }

@@ -8,6 +8,7 @@ class GraftSessionSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "256")
     assert(spark.catalog.functionExists("dot_product"))
   }
 
