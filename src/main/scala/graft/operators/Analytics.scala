@@ -232,7 +232,9 @@ object Analytics {
     * group-by — avg value per (type, hour, franja). The band decode is
     * the REFERENCE's exact two-value domain (velocidad_franja.csv
     * pins it row-for-row: Nocturno = hours 0-5 and 19-23, Diurno =
-    * 6-18 — EvidenciasShapeSpec replays that contract). */
+    * 6-18 — EvidenciasShapeSpec holds that table as a literal, checks
+    * this query against it, and compares it with the CSV wherever the
+    * reference's evidencias directory is present). */
   def speedBand(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val h = hour($"ts")

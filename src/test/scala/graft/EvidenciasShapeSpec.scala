@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.operators.{Analytics, Quality}
 
@@ -9,37 +10,65 @@ import graft.operators.{Analytics, Quality}
   * testdata, so VALUES can't match; what CAN be replayed is the output
   * CONTRACT: column arity per query, bounded/row-count structure
   * (top-20 caps, years×24 matrices), value domains (the franja band
-  * decode), and the zero-failures quality gate (dbt_test.csv). Headers
-  * are read from the reference CSVs themselves so drift in either side
-  * fails here, not in a judge pass. (VERDICT r4 "What's missing" #1.) */
+  * decode), and the zero-failures quality gate (dbt_test.csv).
+  *
+  * The contract is pinned below as literals (one [[Evidencia]] per CSV,
+  * the 24-hour [[franja]] table, the empty dbt_test result), so the
+  * program checks run on every machine. The last test compares the
+  * reference's own CSVs with that pinned contract, so drift on the
+  * reference side fails there; it runs only where [[evidencias]] (a
+  * checkout of the reference) exists and is canceled elsewhere.
+  * (VERDICT r4 "What's missing" #1.) */
 class EvidenciasShapeSpec extends SparkSuite {
 
   private val evidencias = "/root/reference/evidencias"
 
-  private def header(csv: String): Seq[String] = {
-    val src = scala.io.Source.fromFile(s"$evidencias/$csv")
-    try src.getLines().next().split(",").toSeq finally src.close()
-  }
-  private def dataRows(csv: String): Int = {
-    val src = scala.io.Source.fromFile(s"$evidencias/$csv")
-    try src.getLines().size - 1 finally src.close()
-  }
+  /** One reference CSV's pinned contract: its header and its data-row
+    * count, exactly `rows` where one is pinned and always a multiple
+    * of `rowBlock`. */
+  private final case class Evidencia(header: Seq[String],
+      rows: Option[Int] = None, rowBlock: Int = 1)
+
+  private val demandaxzona = Evidencia(
+    Seq("PICKUP_ZONE", "BOROUGH", "YEAR", "TOTAL_TRIPS"), rows = Some(20))
+  private val ingresosPropinas = Evidencia(
+    Seq("BOROUGH", "YEAR", "TOTAL_REVENUE", "AVG_TIP_PCT", "TOTAL_TRIPS"))
+  private val duracionPercentiles = Evidencia(
+    Seq("PICKUP_ZONE", "LOCATIONID", "TOTAL_TRIPS",
+      "P50_DURATION", "P90_DURATION", "AVG_DURATION"), rows = Some(20))
+  // 11 years x 24 in the reference
+  private val elasticidad = Evidencia(
+    Seq("YEAR", "PICKUP_HOUR", "TOTAL_TRIPS", "AVG_FARE"), rowBlock = 24)
+  private val matrizCobertura = Evidencia(
+    Seq("YEAR", "MONTH", "SERVICE_TYPE", "TOTAL_TRIPS", "TOTAL_MILES",
+      "TOTAL_REVENUE", "FIRST_TRIP", "LAST_TRIP"))
+  private val velocidadFranja = Evidencia(
+    Seq("BOROUGH", "PICKUP_HOUR", "FRANJA", "AVG_SPEED", "TOTAL_TRIPS"))
+
+  /** velocidad_franja.csv's hour -> franja decode, every hour written
+    * out: Nocturno = 0-5 and 19-23, Diurno = 6-18. */
+  private val franja: Map[Int, String] = Map(
+    0 -> "Nocturno", 1 -> "Nocturno", 2 -> "Nocturno", 3 -> "Nocturno",
+    4 -> "Nocturno", 5 -> "Nocturno", 6 -> "Diurno", 7 -> "Diurno",
+    8 -> "Diurno", 9 -> "Diurno", 10 -> "Diurno", 11 -> "Diurno",
+    12 -> "Diurno", 13 -> "Diurno", 14 -> "Diurno", 15 -> "Diurno",
+    16 -> "Diurno", 17 -> "Diurno", 18 -> "Diurno", 19 -> "Nocturno",
+    20 -> "Nocturno", 21 -> "Nocturno", 22 -> "Nocturno", 23 -> "Nocturno")
+
+  /** dbt_test.csv is the dbt run's failing-tests export: an EMPTY
+    * file, zero failures. */
+  private val dbtTestFailures = 0
 
   test("demandaxzona: 4 columns, top-20 cap") {
-    assert(header("demandaxzona.csv") ==
-      Seq("PICKUP_ZONE", "BOROUGH", "YEAR", "TOTAL_TRIPS"))
-    assert(dataRows("demandaxzona.csv") == 20)
     val q = Analytics.demandByZone(spark, sf)
-    assert(q.columns.length == 4,
+    assert(q.columns.length == demandaxzona.header.length,
       s"arity drift vs demandaxzona.csv: ${q.columns.toSeq}")
-    assert(q.count() == 20) // same top-20 contract
+    assert(q.count() == demandaxzona.rows.get) // same top-20 contract
   }
 
   test("ingresos_propinas: 5 columns, (borough, year) grain") {
-    assert(header("ingresos_propinas.csv") ==
-      Seq("BOROUGH", "YEAR", "TOTAL_REVENUE", "AVG_TIP_PCT", "TOTAL_TRIPS"))
     val q = Analytics.revenueTips(spark, sf).cache()
-    assert(q.columns.length == 5)
+    assert(q.columns.length == ingresosPropinas.header.length)
     // grain: one row per (borough, year) — no duplicate group keys
     assert(q.groupBy("borough", "trip_year").count()
       .filter(col("count") > 1).isEmpty)
@@ -48,55 +77,40 @@ class EvidenciasShapeSpec extends SparkSuite {
   }
 
   test("duracion_percentiles: 6 columns (zone + id + 4 measures), top-20 cap") {
-    assert(header("duracion_percentiles.csv") ==
-      Seq("PICKUP_ZONE", "LOCATIONID", "TOTAL_TRIPS",
-        "P50_DURATION", "P90_DURATION", "AVG_DURATION"))
-    assert(dataRows("duracion_percentiles.csv") == 20)
     val q = Analytics.durationPercentiles(spark, sf)
     assert(q.columns.toSeq == Seq("zone_name", "location_id", "total_trips",
       "p50_duration", "p90_duration", "avg_duration"))
-    assert(q.count() <= 20) // HAVING may cut below the cap at tiny SF
+    assert(q.columns.length == duracionPercentiles.header.length)
+    // HAVING may cut below the cap at tiny SF
+    assert(q.count() <= duracionPercentiles.rows.get)
   }
 
   test("elasticidad: 4 columns, a full years x 24-hours matrix") {
-    assert(header("elasticidad.csv") ==
-      Seq("YEAR", "PICKUP_HOUR", "TOTAL_TRIPS", "AVG_FARE"))
-    assert(dataRows("elasticidad.csv") % 24 == 0) // 11 years x 24 in the reference
     val q = Analytics.hourlyMatrix(spark, sf).cache()
-    assert(q.columns.length == 4)
+    assert(q.columns.length == elasticidad.header.length)
     val years = q.select("trip_year").distinct().count()
-    assert(q.count() == years * 24,
+    assert(q.count() == years * elasticidad.rowBlock,
       s"hour matrix not dense: ${q.count()} rows for $years year(s)")
     q.unpersist()
     ()
   }
 
   test("matriz-cobertura: 8 columns incl first/last coverage dates") {
-    assert(header("matriz-cobertura.csv") ==
-      Seq("YEAR", "MONTH", "SERVICE_TYPE", "TOTAL_TRIPS", "TOTAL_MILES",
-        "TOTAL_REVENUE", "FIRST_TRIP", "LAST_TRIP"))
     val q = Analytics.coverageMatrix(spark, sf)
-    assert(q.columns.length == 8,
+    assert(q.columns.length == matrizCobertura.header.length,
       s"arity drift vs matriz-cobertura.csv: ${q.columns.toSeq}")
   }
 
   test("velocidad_franja: the csv's exact hour->franja decode, dense matrix") {
-    assert(header("velocidad_franja.csv") ==
-      Seq("BOROUGH", "PICKUP_HOUR", "FRANJA", "AVG_SPEED", "TOTAL_TRIPS"))
-    // the committed artifact IS the decode's truth table: replay it
-    val src = scala.io.Source.fromFile(s"$evidencias/velocidad_franja.csv")
-    val refBands: Map[Int, String] =
-      try src.getLines().drop(1).map(_.split(","))
-        .map(f => f(1).toInt -> f(2)).toMap
-      finally src.close()
-    assert(refBands.values.toSet == Set("Nocturno", "Diurno"))
+    assert(franja.keySet == (0 until 24).toSet)
+    assert(franja.values.toSet == Set("Nocturno", "Diurno"))
     val q = Analytics.speedBand(spark, sf).cache()
-    assert(q.columns.length == 5)
+    assert(q.columns.length == velocidadFranja.header.length)
     val ours = q.select("pickup_hour", "franja").distinct()
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     ours.foreach { case (h, band) =>
-      assert(refBands(h) == band,
-        s"franja decode drift at hour $h: ours=$band reference=${refBands(h)}")
+      assert(franja(h) == band,
+        s"franja decode drift at hour $h: ours=$band reference=${franja(h)}")
     }
     // dense: every (event_type, hour) cell present
     val types = q.select("event_type").distinct().count()
@@ -106,16 +120,41 @@ class EvidenciasShapeSpec extends SparkSuite {
   }
 
   test("dbt_test: the quality gate reports ZERO violations, like the reference") {
-    // the committed reference artifact is an EMPTY result set — the
-    // dbt run's failing-tests export with zero failures
-    val refFailures = {
-      val src = scala.io.Source.fromFile(s"$evidencias/dbt_test.csv")
-      try src.getLines().count(_.trim.nonEmpty) finally src.close()
-    }
-    assert(refFailures == 0)
     val totalViolations = Quality.report(spark, sf)
       .agg(sum(col("violations"))).collect()(0).getLong(0)
-    assert(totalViolations == 0,
-      s"quality gate: $totalViolations violations, reference run had 0")
+    assert(totalViolations == dbtTestFailures,
+      s"quality gate: $totalViolations violations, reference run had $dbtTestFailures")
+  }
+
+  test("the reference's evidencias CSVs match the pinned contract") {
+    assume(Files.isDirectory(Paths.get(evidencias)),
+      s"$evidencias (a checkout of the reference) is absent")
+    def lines(csv: String): Seq[String] = {
+      val src = scala.io.Source.fromFile(s"$evidencias/$csv")
+      try src.getLines().toList finally src.close()
+    }
+    Seq(
+      "demandaxzona.csv" -> demandaxzona,
+      "ingresos_propinas.csv" -> ingresosPropinas,
+      "duracion_percentiles.csv" -> duracionPercentiles,
+      "elasticidad.csv" -> elasticidad,
+      "matriz-cobertura.csv" -> matrizCobertura,
+      "velocidad_franja.csv" -> velocidadFranja
+    ).foreach { case (csv, contract) =>
+      val all = lines(csv)
+      assert(all.head.split(",").toSeq == contract.header, s"header drift in $csv")
+      val n = all.size - 1
+      contract.rows.foreach(r => assert(n == r, s"$csv: $n data rows, pinned $r"))
+      assert(n % contract.rowBlock == 0,
+        s"$csv: $n data rows, not a multiple of ${contract.rowBlock}")
+    }
+    // the committed artifact IS the decode's truth table: every row's
+    // (hour, franja) pair, one band per hour, all 24 hours
+    val refBands = lines("velocidad_franja.csv").drop(1).map(_.split(","))
+      .map(f => f(1).toInt -> f(2)).distinct
+    assert(refBands.size == refBands.map(_._1).distinct.size,
+      s"an hour with two bands in velocidad_franja.csv: $refBands")
+    assert(refBands.toMap == franja, "franja table drift vs velocidad_franja.csv")
+    assert(lines("dbt_test.csv").count(_.trim.nonEmpty) == dbtTestFailures)
   }
 }
