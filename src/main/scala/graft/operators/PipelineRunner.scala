@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 
 /** The `dbt run` analog — the reference's main entry point (SURVEY §3
@@ -12,8 +12,12 @@ import org.apache.spark.sql.functions.current_timestamp
   * to the warehouse (dbt_project.yml, profiles.yml `threads: 4/8`).
   *
   * Spark shape: each model is a `DataFrame`-producing function; deps are
-  * an explicit edge list; materialization is an overwrite parquet write
-  * + re-read (the "table"). The DAG runs in dependency-depth waves
+  * an explicit edge list; materialization is a parquet table at
+  * `outRoot/<model>`, replaced through [[graft.sources.Ingest.writeAudited]]
+  * (the `CREATE OR REPLACE TABLE` analog): the model writes to staging,
+  * the audit counts the staged rows, and only then is the old table
+  * swapped out, so a model that fails mid-write leaves its last good
+  * table readable. The DAG runs in dependency-depth waves
   * (roots, then `fct_trips`), each one [[graft.Concurrent.all]] call
   * (the dbt `threads` analog): a failing model fails its wave, named,
   * once its siblings settle, and the later waves (its dependents) are
@@ -82,9 +86,8 @@ object PipelineRunner {
       ms: Seq[Model]): Map[String, Long] =
     waves(ms).flatMap { wave =>
       graft.Concurrent.all(spark, wave.map { m => m.name -> { () =>
-        val dir = s"$outRoot/${m.name}"
-        m.build(spark, sfDir).write.mode(SaveMode.Overwrite).parquet(dir)
-        m.name -> spark.read.parquet(dir).count()
+        m.name -> graft.sources.Ingest.writeAudited(
+          m.build(spark, sfDir), s"$outRoot/${m.name}")(_.count())
       }})
     }.toMap
 }

@@ -261,65 +261,60 @@ object Ingest {
   /** Write-audit-publish — the reliability pattern around every
     * production sink: write to a staging location, audit THE STAGED
     * DATA (not the frame that produced it — the files that will be
-    * served are what gets checked), and only then swap it in. A failed
-    * audit deletes the staging dir and leaves the currently-published
-    * version untouched, so consumers never observe a half-written or
+    * served are what gets checked), and only then swap it in. The
+    * audit returns a value (a row count, say), which this returns once
+    * the swap is done; it rejects the data by throwing. On every
+    * failure — the write throws, the audit throws, a rename fails — the
+    * staging dir is deleted and the currently-published version is left
+    * untouched, so consumers never observe a half-written or
     * quality-failing table.
     *
     * The swap here is rename-based (previous version parked at
     * `<dir>.old` until the new one is in place — a crash between
     * renames leaves a recoverable copy). Real table formats swap a
     * metastore pointer instead; the staging/audit/publish contract is
-    * identical, which is what this operator demonstrates.
-    *
-    * Returns true iff published. */
-  def writeAudited(df: DataFrame, dir: String,
-      audit: DataFrame => Boolean,
-      stagingMark: Option[(String, String)] = None): Boolean = {
+    * identical, which is what this operator demonstrates. */
+  def writeAudited[T](df: DataFrame, dir: String,
+      stagingMark: Option[(String, String)] = None)(audit: DataFrame => T): T = {
     val spark = df.sparkSession
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val staging = s"$dir.staging"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    // optional marker written INTO staging before the swap: it travels
-    // atomically with the published version (underscore prefix keeps it
-    // invisible to parquet readers) — what makes a publish-then-record
-    // protocol crash-safe for consumers like the streaming IVM's
-    // applied-batch watermark
-    stagingMark.foreach { case (name, content) =>
-      val out = fs.create(p(s"$staging/$name"), true)
-      out.write(content.getBytes("UTF-8")); out.close()
-    }
-    val ok = audit(spark.read.parquet(staging))
-    if (ok) {
-      // every rename's Boolean is CHECKED (round-6 review): a silently
-      // failed park would let the staging rename land INSIDE the still-
-      // existing dir (HDFS rename-into-directory semantics) and the
-      // final cleanup would then delete the only good copy while this
-      // function reports success
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(staging)
+      // optional marker written INTO staging before the swap: it travels
+      // atomically with the published version (underscore prefix keeps it
+      // invisible to parquet readers) — what makes a publish-then-record
+      // protocol crash-safe for consumers like the streaming IVM's
+      // applied-batch watermark
+      stagingMark.foreach { case (name, content) =>
+        val out = fs.create(p(s"$staging/$name"), true)
+        out.write(content.getBytes("UTF-8")); out.close()
+      }
+      val result = audit(spark.read.parquet(staging))
+      // every rename's Boolean is CHECKED: a silently failed park would
+      // let the staging rename land INSIDE the still-existing dir (HDFS
+      // rename-into-directory semantics) and the final cleanup would
+      // then delete the only good copy while this function reports
+      // success
       val old = p(s"$dir.old")
       fs.delete(old, true)
-      if (fs.exists(p(dir)) && !fs.rename(p(dir), old)) {
-        fs.delete(p(staging), true)
+      if (fs.exists(p(dir)) && !fs.rename(p(dir), old))
         throw new java.io.IOException(
           s"writeAudited: could not park current version $dir -> $old; " +
             "table left at previous version, staging discarded")
-      }
       if (!fs.rename(p(staging), p(dir))) {
         // restore the parked version so the table never vanishes; only
         // then fail loudly
         val restored = !fs.exists(old) || fs.rename(old, p(dir))
-        fs.delete(p(staging), true)
         throw new java.io.IOException(
           s"writeAudited: publish rename $staging -> $dir failed; previous " +
             s"version ${if (restored) "restored" else s"PARKED at $old"}")
       }
       fs.delete(old, true)
-    } else {
-      fs.delete(p(staging), true)
-    }
-    ok
+      result
+    } finally fs.delete(p(staging), true) // nothing left after a swap
   }
 
   /** MERGE/upsert for plain-parquet tables — the rewrite pattern every

@@ -17,11 +17,13 @@ import org.apache.spark.sql.functions._
   *  - at publish, the just-written data files' FOOTERS (no column
   *    data) are distilled into a stats table — one row per
   *    (file, column): row count, min, max — stored as
-  *    `_manifest/` INSIDE the snapshot directory ([[Versioned]]'s
-  *    underscore convention keeps it invisible to data reads), and
-  *    the `_commit_N` marker lands only after BOTH — so data and
-  *    manifest become visible in the same atomic step, and a crash
-  *    mid-publish leaves an orphan invisible to readers;
+  *    `_manifest/` INSIDE the snapshot directory (the underscore
+  *    prefix keeps it invisible to data reads). The snapshot is a
+  *    [[Versioned]] one: `publish` hands [[Versioned.publish]] a write
+  *    that lays down data AND manifest, so Versioned's commit marker
+  *    lands only after both — data and manifest become visible in the
+  *    same atomic step, and a crash mid-publish leaves an orphan
+  *    invisible to readers;
   *  - at read, the planner consults the manifest (ONE tiny parquet
   *    table, however many data files exist) and hands Spark only the
   *    files whose [min, max] intersect the predicate — listing and
@@ -124,38 +126,30 @@ object ManifestIndex {
     }.toSeq
   }
 
-  /** Publish a new snapshot whose data files are produced by `write`
-    * (called with the fresh `v=N` directory — any layout: batch
-    * appends, partitioned writes). The manifest is then built from the
-    * written files' footers and stored INSIDE the snapshot dir, and
-    * only then does the commit marker land: readers observe data and
-    * manifest together or not at all ([[Versioned]]'s marker-file
-    * atomicity, extended to cover the index). Returns the version. */
+  /** Publish a new [[Versioned]] snapshot whose data files are
+    * produced by `write` (called with the fresh `v=N` directory — any
+    * layout: batch appends, partitioned writes). The manifest is then
+    * built from the written files' footers and stored INSIDE the
+    * snapshot dir, and both are written inside [[Versioned.publish]]'s
+    * write, so its commit marker covers the index too: readers observe
+    * data and manifest together or not at all. Returns the version. */
   def publish(spark: SparkSession, dir: String, statsCols: Seq[String])
-      (write: String => Unit): Int = {
-    val f = fs(spark, dir)
-    val existing = (if (f.exists(p(dir)))
-      f.listStatus(p(dir)).toSeq.map(_.getPath.getName) else Seq.empty)
-    val next = (existing.collect { case s if s.startsWith("v=") => s.drop(2).toInt } ++
-      existing.collect { case s if s.startsWith("_commit_") => s.drop(8).toInt })
-      .maxOption.getOrElse(-1) + 1
-    val dataDir = s"$dir/v=$next"
-    write(dataDir)
-    import spark.implicits._
-    val stats = collectStats(spark, dataDir, statsCols)
-    require(stats.nonEmpty, s"manifest publish: no data files under $dataDir")
-    stats.map(s => (s.file, s.rowCount, s.col,
-        s.minLong.map(java.lang.Long.valueOf).orNull,
-        s.maxLong.map(java.lang.Long.valueOf).orNull,
-        s.minDouble.map(java.lang.Double.valueOf).orNull,
-        s.maxDouble.map(java.lang.Double.valueOf).orNull))
-      .toDF("file", "row_count", "col", "min_long", "max_long",
-        "min_double", "max_double")
-      .coalesce(1)
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$dataDir/_manifest")
-    f.create(p(s"$dir/_commit_$next"), false).close()
-    next
-  }
+      (write: String => Unit): Int =
+    Versioned.publish(spark, dir, None) { dataDir =>
+      write(dataDir)
+      import spark.implicits._
+      val stats = collectStats(spark, dataDir, statsCols)
+      require(stats.nonEmpty, s"manifest publish: no data files under $dataDir")
+      stats.map(s => (s.file, s.rowCount, s.col,
+          s.minLong.map(java.lang.Long.valueOf).orNull,
+          s.maxLong.map(java.lang.Long.valueOf).orNull,
+          s.minDouble.map(java.lang.Double.valueOf).orNull,
+          s.maxDouble.map(java.lang.Double.valueOf).orNull))
+        .toDF("file", "row_count", "col", "min_long", "max_long",
+          "min_double", "max_double")
+        .coalesce(1)
+        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dataDir/_manifest")
+    }
 
   /** The committed snapshot's stats table. */
   def manifest(spark: SparkSession, dir: String, version: Int = -1): DataFrame = {

@@ -62,10 +62,18 @@ object Versioned {
   def currentVersion(spark: SparkSession, dir: String): Int =
     versions(spark, dir).lastOption.getOrElse(-1)
 
-  /** Publish `df` as the next snapshot; returns its version number.
-    * Numbering skips over orphan directories left by crashed publishes,
-    * and the commit marker appears atomically — a reader never observes
-    * a half-written snapshot.
+  /** Publish `df` as the next snapshot; returns its version number. */
+  def publish(df: DataFrame, dir: String, meta: Option[String] = None): Int =
+    publish(df.sparkSession, dir, meta)(df.write.mode(SaveMode.ErrorIfExists).parquet(_))
+
+  /** Publish the next snapshot, whose files `write` lays down in the
+    * fresh `v=N` directory it is called with (any layout, and any
+    * files beside the data, such as [[ManifestIndex]]'s stats); returns
+    * the version number. Numbering skips over orphan directories left
+    * by crashed publishes, and the commit marker appears atomically,
+    * only after `write` returns — a reader never observes a
+    * half-written snapshot, and a `write` that throws leaves an orphan.
+    * This is the only code that numbers versions and creates markers.
     *
     * `meta`, when given, is recorded INSIDE the commit marker (staged
     * to a temp file, atomic rename) so it becomes visible in the same
@@ -74,12 +82,12 @@ object Versioned {
     * orphans, so "version == batchId" does NOT hold across a crashed
     * publish, and a replay guard must key on the recorded id, never on
     * [[currentVersion]]. */
-  def publish(df: DataFrame, dir: String, meta: Option[String] = None): Int = {
-    val spark = df.sparkSession
+  def publish(spark: SparkSession, dir: String, meta: Option[String])
+      (write: String => Unit): Int = {
     val f = fs(spark, dir)
     val next = (dataDirs(spark, dir) ++ versions(spark, dir))
       .maxOption.getOrElse(-1) + 1
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/v=$next")
+    write(s"$dir/v=$next")
     meta match {
       case None => f.create(p(s"$dir/_commit_$next"), false).close()
       case Some(m) =>

@@ -526,9 +526,10 @@ object EventsStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val current = spark.read.parquet(tableDir)
         val merged = graft.sources.Ingest.upsert(current, batch, "event_id")
-        val ok = graft.sources.Ingest.writeAudited(merged, tableDir,
-          a => a.groupBy("event_id").count().filter(col("count") > 1).isEmpty)
-        require(ok, s"CDC audit failed for $tableDir — table left at previous version")
+        graft.sources.Ingest.writeAudited(merged, tableDir) { a =>
+          require(a.groupBy("event_id").count().filter(col("count") > 1).isEmpty,
+            s"CDC audit failed for $tableDir — table left at previous version")
+        }
         batches += 1
         ()
       }
@@ -631,10 +632,11 @@ object EventsStream {
       // rows each tripled it for nothing (r8 streaming amortization)
       val maintained = graft.operators.MaterializedView.maintain(stored, batch)
         .coalesce(1)
-      val ok = graft.sources.Ingest.writeAudited(maintained, viewDir,
-        a => a.groupBy("event_type", "day").count().filter(col("count") > 1).isEmpty,
-        stagingMark = Some(("_applied_batch", batchId.toString)))
-      require(ok, s"IVM audit failed for $viewDir — view left at previous version")
+      graft.sources.Ingest.writeAudited(maintained, viewDir,
+          stagingMark = Some(("_applied_batch", batchId.toString))) { a =>
+        require(a.groupBy("event_type", "day").count().filter(col("count") > 1).isEmpty,
+          s"IVM audit failed for $viewDir — view left at previous version")
+      }
       true
     }
   }
@@ -758,10 +760,11 @@ object EventsStream {
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
         .select(col("week"), col("value"), col("pri"))
         .coalesce(1)
-      val ok = graft.sources.Ingest.writeAudited(merged, sketchDir,
-        a => a.groupBy("week").count().filter(col("count") > k).isEmpty,
-        stagingMark = Some(("_applied_batch", batchId.toString)))
-      require(ok, s"sketch audit failed for $sketchDir — state left at previous version")
+      graft.sources.Ingest.writeAudited(merged, sketchDir,
+          stagingMark = Some(("_applied_batch", batchId.toString))) { a =>
+        require(a.groupBy("week").count().filter(col("count") > k).isEmpty,
+          s"sketch audit failed for $sketchDir — state left at previous version")
+      }
       true
     }
   }

@@ -160,27 +160,68 @@ class WapSpec extends SparkSuite {
   import spark.implicits._
   import graft.sources.Ingest
 
-  test("write-audit-publish: good data publishes, bad data rejected with previous version intact") {
+  private def v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+
+  /** A temp table with v1 published; `body` gets its dir. */
+  private def withTable(body: String => Unit): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_wap_").toString
-    val table = s"$tmp/t"
     try {
-      val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      assert(Ingest.writeAudited(v1, table, _.count() == 2))
-      assert(spark.read.parquet(table).count() == 2)
-      // v2 fails its audit (empty not allowed) → v1 must still be served
-      val v2 = v1.filter($"id" > 99)
-      assert(!Ingest.writeAudited(v2, table, _.count() > 0))
-      val served = spark.read.parquet(table).orderBy($"id")
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      assert(served.toSeq == Seq((1L, "a"), (2L, "b")))
-      assert(!new java.io.File(s"$table.staging").exists())
-      // v3 passes → replaces v1
-      val v3 = Seq((9L, "z")).toDF("id", "v")
-      assert(Ingest.writeAudited(v3, table, _.count() == 1))
-      assert(spark.read.parquet(table).count() == 1)
+      assert(Ingest.writeAudited(v1, s"$tmp/t")(_.count()) == 2L)
+      body(s"$tmp/t")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
       ()
+    }
+  }
+
+  /** v1 is still served and the failed publish left nothing behind. */
+  private def assertV1Intact(table: String): Unit = {
+    val served = spark.read.parquet(table).orderBy($"id")
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(served.toSeq == Seq((1L, "a"), (2L, "b")))
+    assert(!new java.io.File(s"$table.staging").exists())
+    assert(!new java.io.File(s"$table.old").exists())
+  }
+
+  test("write-audit-publish: good data publishes, bad data rejected with previous version intact") {
+    withTable { table =>
+      assert(spark.read.parquet(table).count() == 2)
+      // v2 fails its audit (empty not allowed) → v1 must still be served
+      val v2 = v1.filter($"id" > 99)
+      val e = intercept[IllegalArgumentException] {
+        Ingest.writeAudited(v2, table) { a =>
+          require(a.count() > 0, s"audit rejected an empty $table")
+        }
+      }
+      assert(e.getMessage.contains(table), e.getMessage)
+      assertV1Intact(table)
+      // v3 passes → replaces v1
+      val v3 = Seq((9L, "z")).toDF("id", "v")
+      assert(Ingest.writeAudited(v3, table)(_.count()) == 1L)
+      assert(spark.read.parquet(table).count() == 1)
+    }
+  }
+
+  test("write-audit-publish: a write that throws leaves the previous version intact") {
+    withTable { table =>
+      // a range, not a local Seq: the optimizer would evaluate a
+      // projection over local rows before the write began
+      val failing = spark.range(1, 3)
+        .selectExpr("id", "CAST(raise_error('mid-write') AS STRING) AS v")
+      val e = intercept[Exception](Ingest.writeAudited(failing, table)(_.count()))
+      assert(e.getMessage.contains("mid-write"), e.getMessage)
+      assertV1Intact(table)
+    }
+  }
+
+  test("write-audit-publish: an audit that throws leaves the previous version intact") {
+    withTable { table =>
+      val v2 = Seq((3L, "c")).toDF("id", "v")
+      val e = intercept[Exception] {
+        Ingest.writeAudited(v2, table)(_.selectExpr("raise_error('audit blew up')").collect())
+      }
+      assert(e.getMessage.contains("audit blew up"), e.getMessage)
+      assertV1Intact(table)
     }
   }
 }

@@ -36,4 +36,9 @@ class GraftSessionSpec extends SparkSuite {
       """Await\.|Future\.sequence|Executors\.new|ExecutionContext""")
     assert(bad.isEmpty, bad.mkString("run concurrent work with Concurrent.all: ", ", ", ""))
   }
+
+  test("no src/main file but Versioned.scala names a snapshot commit marker") {
+    val bad = offenders("Versioned.scala", "_commit_")
+    assert(bad.isEmpty, bad.mkString("publish snapshots through Versioned.publish: ", ", ", ""))
+  }
 }

@@ -200,6 +200,23 @@ class PipelineRunnerSpec extends SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("a model that fails mid-write leaves its last good table readable") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_keep").toString
+    try {
+      val good = PipelineRunner.Model("trips", Nil, (s, _) => s.range(10).toDF())
+      assert(PipelineRunner.runModels(spark, sf, out, Seq(good)) == Map("trips" -> 10L))
+      // the rerun's write fails inside a task, after the write has begun
+      val bad = PipelineRunner.Model("trips", Nil, (s, _) =>
+        s.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id"))
+      val e = intercept[Exception](PipelineRunner.runModels(spark, sf, out, Seq(bad)))
+      assert(e.getMessage.startsWith("trips: "), e.getMessage)
+      assert(e.getMessage.contains("mid-write"), e.getMessage)
+      assert(spark.read.parquet(s"$out/trips").count() == 10)
+      assert(!new java.io.File(s"$out/trips.staging").exists())
+      assert(!new java.io.File(s"$out/trips.old").exists())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("an interrupted run cancels its models' Spark jobs") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_cancel").toString
     try assertInterruptCancels("sleepy") {
@@ -700,27 +717,6 @@ class IngestSpec extends SparkSuite {
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "missing_2099-01.parquet")))
     } finally server.stop(0)
-  }
-}
-
-class TypedAggSpec extends SparkSuite {
-
-  test("typed VectorMean aggregator matches the expression-path mean per dim") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val typed = graft.functions.TypedAggs.labelCentroids(spark, "/root/testdata/sf0.01")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    val viaExpr = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
-      .select($"label", posexplode($"embedding"))
-      .groupBy($"label", $"pos")
-      .agg(avg($"col".cast("double")).as("m"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    typed.foreach { case (label, centroid) =>
-      centroid.zipWithIndex.foreach { case (v, i) =>
-        assert(math.abs(v - viaExpr((label, i))) < 1e-9, s"label=$label dim=$i")
-      }
-    }
-    assert(typed.size == 10)
   }
 }
 
