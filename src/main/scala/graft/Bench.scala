@@ -85,42 +85,10 @@ object Bench {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
 
-    // contention sentinel: a fixed single-thread LCG spin whose cost is
-    // a machine constant (~0.5 s quiet on this box: 400M dependent
-    // multiply-adds at ~4 cycles each) — NOT data- or
-    // code-dependent, so any inflation is external CPU contention, and a
-    // poisoned run self-identifies (r3's official snapshot was a 1.5×
-    // contention outlier with no way to tell from the artifact alone).
-    // Measured at start AND end; excluded from the headline total.
-    def spin(iters: Long): Long = {
-      var x = 0x9E3779B97F4A7C15L; var i = 0L
-      while (i < iters) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
-      x
-    }
-    def spinSentinel(): Double = {
-      val sink = spin(10L * 1000 * 1000) // JIT warm-up, untimed
-      val t0 = System.nanoTime()
-      val sink2 = spin(400L * 1000 * 1000)
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (sink == 42L || sink2 == 42L) println("") // defeat DCE
-      dt
-    }
-    // the parallel twin: one thread per session core, spinning at once.
-    // On an idle box with that many free cores its wall time equals the
-    // single-thread constant; inflation HERE with a clean single-thread
-    // sentinel means the box has fewer free cores than the bench assumes
-    // (another tenant, cgroup quota) — exactly the contention that
-    // stretches multi-thread query stages but leaves one-core probes
-    // untouched.
-    def spinSentinelMt(): Double = {
-      val n = spark.sparkContext.defaultParallelism
-      val t0 = System.nanoTime()
-      val threads = (1 to n).map { _ =>
-        new Thread(() => { if (spin(400L * 1000 * 1000) == 42L) println("") })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    // contention sentinels (graft.Sentinel): a fixed single-thread spin
+    // measured at start AND end, and its parallel twin on one thread per
+    // session core — inflation of the twin alone means the box has fewer
+    // free cores than the bench assumes. Excluded from the headline total.
     // caches are dropped before EVERY run, not just between queries:
     // several builders cache-and-pin intermediates (jaccard prefix,
     // quality fact, cluster edges), and an un-cleared second run would
@@ -140,8 +108,9 @@ object Bench {
         .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
 
     if (only.isEmpty) {
-      results("bench_sentinel_spin_start") = spinSentinel()
-      results("bench_sentinel_spin_mt") = spinSentinelMt()
+      results("bench_sentinel_spin_start") = Sentinel.spinSeconds()
+      results("bench_sentinel_spin_mt") =
+        Sentinel.spinMtSeconds(spark.sparkContext.defaultParallelism)
       // I/O twin of the CPU sentinel (fixed 128 MB write+fsync+read on
       // the stage/checkpoint filesystem): r4's 16× stage-build blow-up
       // had a clean CPU sentinel — only a disk probe exposes that mode
@@ -367,7 +336,7 @@ object Bench {
       val mDir = s"/tmp/graft_manifest_${new java.io.File(sfDir).getName}"
       // publish() is append-versioned: clear prior bench runs' snapshots
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(mDir))
-      import org.apache.spark.sql.functions.{col => fcol, year => fyear, date_format => fdate_format, count => fcount, lit => flit, sum => fsum, to_date => fto_date}
+      import org.apache.spark.sql.functions.{col => fcol, year => fyear, date_format => fdate_format, count => fcount, lit => flit, to_date => fto_date}
       val orders = graft.sources.Tables.orders(spark, sfDir)
         .select(fcol("o_orderkey"),
           fto_date(fcol("o_orderdate")).as("o_orderdate"),
@@ -393,7 +362,7 @@ object Bench {
         .filter(fyear(fcol("o_orderdate")) === 1997)
         .groupBy(fdate_format(fcol("o_orderdate"), "yyyy-MM").as("order_month"))
         .agg(fcount(flit(1)).as("n"),
-          fsum(fcol("o_totalprice").cast("decimal(27,6)")).as("rev"))
+          graft.functions.Exact.sumDecimal(fcol("o_totalprice")).as("rev"))
       def prunedQ = rollup(graft.sources.ManifestIndex
         .readPruned(spark, mDir, "o_orderdate", lo, hi)._1)
       val pQ1 = prunedQ
@@ -424,13 +393,13 @@ object Bench {
         operators.MaterializedView.dailyMv(events)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$mvDir/mv")
       }
-      import org.apache.spark.sql.functions.{count => fcount, lit => flit, min => fmin, max => fmax, sum => fsum, to_date => fto_date, col => fcol}
+      import org.apache.spark.sql.functions.{count => fcount, lit => flit, min => fmin, max => fmax, to_date => fto_date, col => fcol}
       def rollup = events
         .filter(fto_date(fcol("ts")) >= flit("2024-01-10") &&
           fcol("event_type") =!= "error")
         .groupBy(fcol("event_type"))
         .agg(fcount(flit(1)).as("n"),
-          fsum(fcol("value").cast("decimal(27,6)")).as("total_dec"),
+          graft.functions.Exact.sumDecimal(fcol("value")).as("total_dec"),
           fmin(fcol("value")).as("min_value"), fmax(fcol("value")).as("max_value"))
       // `rollup` is a def: each timed run plans and scans afresh —
       // re-collecting one DataFrame instance would reuse its already-
@@ -476,7 +445,7 @@ object Bench {
       else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def entry(k: String, v: Double): String = "\"" + k + "\":" + fmt(v)
 
-    results("bench_sentinel_spin_end") = spinSentinel()
+    results("bench_sentinel_spin_end") = Sentinel.spinSeconds()
     results("bench_sentinel_disk_end") = Sentinel.diskSeconds()
     results("bench_sentinel_membw_end") = Sentinel.membwSeconds()
     // per-stage build seconds (subsets of the lump-sum *_stage_build

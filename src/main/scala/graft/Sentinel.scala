@@ -6,7 +6,8 @@ package graft
   * external contention rather than a code regression.
   *
   *  - [[spinSeconds]]: 400M dependent multiply-adds on ONE thread
-  *    (~0.5 s quiet) — CPU contention probe.
+  *    (~0.5 s quiet) — CPU contention probe; [[spinMtSeconds]] runs it
+  *    on several threads at once — free-core probe.
   *  - [[diskSeconds]]: write 128 MB in 1 MB chunks + fsync + read-back
   *    on the temp filesystem the stage artifacts / checkpoints use —
   *    I/O probe. r4's bench showed a 16× dedup-stage-build blow-up with
@@ -33,6 +34,20 @@ object Sentinel {
     val dt = (System.nanoTime() - t0) / 1e9
     if (warm == 42L || sink == 42L) println("") // defeat DCE
     dt
+  }
+
+  /** The parallel twin of [[spinSeconds]]: `threads` threads spinning at
+    * once. With that many free cores its wall time equals the
+    * single-thread constant; inflation here with a clean [[spinSeconds]]
+    * means the box has fewer free cores than assumed (another tenant, a
+    * cgroup quota), which stretches multi-thread stages only. */
+  def spinMtSeconds(threads: Int): Double = {
+    val t0 = System.nanoTime()
+    val ts = (1 to threads).map { _ =>
+      new Thread(() => { if (spin(400L * 1000 * 1000) == 42L) println("") })
+    }
+    ts.foreach(_.start()); ts.foreach(_.join())
+    (System.nanoTime() - t0) / 1e9
   }
 
   def diskSeconds(mb: Int = 128): Double = {

@@ -74,7 +74,7 @@ object Clustering {
       // recomputing one costs less than churning the block store
       if (it == iters) assigned = assigned.cache()
       if (trackInertia) inertias += assigned
-        .agg(sum($"d2".cast("decimal(27,6)")).cast("double")).collect().head.getDouble(0)
+        .agg(Exact.sumExact($"d2")).collect().head.getDouble(0)
       // no update after the FINAL assignment: the returned centroids
       // must be exactly the model the returned assignment is nearest to
       if (it < iters) {
@@ -154,7 +154,7 @@ object Clustering {
     val (assigned, _, _) = kmeansFull(spark, sfDir, k, iters, trackInertia = false)
     val summary = assigned.groupBy($"cluster_id")
       .agg(count(lit(1)).as("n_vecs"),
-        round(sum($"d2".cast("decimal(27,6)")).cast("double"), 6).as("inertia"))
+        round(Exact.sumExact($"d2"), 6).as("inertia"))
       .orderBy($"cluster_id")
       .localCheckpoint(eager = true)
     assigned.unpersist()

@@ -37,7 +37,7 @@ object Skew {
     df.withColumn("_salt", pmod(monotonically_increasing_id(), lit(salts.toLong)))
       .groupBy(col(key), $"_salt")
       .agg(
-        sum(col(valueCol).cast("decimal(27,6)")).as("_psum"),
+        Exact.sumDecimal(col(valueCol)).as("_psum"),
         count(lit(1)).as("_pcnt"))
       .groupBy(col(key))
       .agg(

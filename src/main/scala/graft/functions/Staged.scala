@@ -66,6 +66,19 @@ object Staged {
     * dedup-stage anomaly was only visible as an opaque lump sum). */
   private val buildSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
   def buildTimes: Map[String, Double] = buildSecs.synchronized { buildSecs.toMap }
+
+  /** Run `build`, record its seconds under `key` and print a stdout
+    * breadcrumb for perf triage (Bench/Verify parse tagged lines only,
+    * so it is inert to both contracts). A build that throws records
+    * nothing. */
+  private def timed(key: String)(build: => Unit): Unit = {
+    val t0 = System.nanoTime()
+    build
+    val secs = (System.nanoTime() - t0) / 1e9
+    buildSecs.synchronized { buildSecs(key) = secs }
+    println(f"[stage] built $key in $secs%.2f s")
+  }
+
   private lazy val stageRoot = {
     // same scratch tier as the gate work dirs (sf0.1 artifacts total
     // tens of MB — RAM-residency is free at gate scale)
@@ -87,13 +100,7 @@ object Staged {
       (build: => DataFrame): DataFrame = {
     val cell = staged.computeIfAbsent(key, _ => new Cell(() => {
       val p = s"$stageRoot/$key"
-      val t0 = System.nanoTime()
-      build.write.mode("overwrite").parquet(p)
-      val secs = (System.nanoTime() - t0) / 1e9
-      buildSecs.synchronized { buildSecs(key) = secs }
-      // stdout breadcrumb for perf triage (Bench/Verify parse tagged
-      // lines only, so this is inert to both contracts)
-      println(f"[stage] built $key in $secs%.2f s")
+      timed(key)(build.write.mode("overwrite").parquet(p))
       p
     }))
     spark.read.parquet(cell.path)
@@ -117,11 +124,7 @@ object Staged {
       // (directory builders write with the default ErrorIfExists;
       // the frame twin above is overwrite-mode and needs no sweep)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      val t0 = System.nanoTime()
-      build(p)
-      val secs = (System.nanoTime() - t0) / 1e9
-      buildSecs.synchronized { buildSecs(s"dir_$key") = secs }
-      println(f"[stage] built dir $key in $secs%.2f s")
+      timed(s"dir_$key")(build(p))
       p
     })).path
   }

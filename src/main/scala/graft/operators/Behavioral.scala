@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Behavioral / product analytics over the events stream: ordered
@@ -146,7 +147,7 @@ object Behavioral {
 
   private[graft] def topKPerGroupFrom(events: DataFrame, k: Int): DataFrame = {
     val totals = events.groupBy(col("event_type"), col("user_id"))
-      .agg(sum(col("value").cast("decimal(27,6)")).as("total_value_dec"))
+      .agg(Exact.sumDecimal(col("value")).as("total_value_dec"))
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("total_value_dec").desc, col("user_id"))
     totals.withColumn("rank", row_number().over(w))
@@ -191,7 +192,7 @@ object Behavioral {
   private[graft] def topKPerGroupHeapFrom(events: DataFrame, k: Int): DataFrame = {
     import events.sparkSession.implicits._
     val totals = events.groupBy(col("event_type"), col("user_id"))
-      .agg(sum(col("value").cast("decimal(27,6)")).cast("string").as("total_value_dec"))
+      .agg(Exact.sumDecimal(col("value")).cast("string").as("total_value_dec"))
       .as[(String, Long, String)]
     val agg = new TopKByValue(k)
     totals.groupByKey(_._1)
@@ -277,8 +278,8 @@ object Behavioral {
     // and cross-joining would re-run the scan+groupBy per variant
     def side(v: String) = (
       sum(when(col("variant") === v, 1L).otherwise(0L)),
-      sum(when(col("variant") === v, col("value").cast("decimal(27,6)"))),
-      sum(when(col("variant") === v, (col("value") * col("value")).cast("decimal(27,6)"))))
+      Exact.sumDecimal(when(col("variant") === v, col("value"))),
+      Exact.sumDecimal(when(col("variant") === v, col("value") * col("value"))))
     val (na, s1a, s2a) = side("A")
     val (nb, s1b, s2b) = side("B")
     val m = events.agg(

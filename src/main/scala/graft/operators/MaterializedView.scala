@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Incremental view maintenance (IVM) — keeping an aggregate table
@@ -23,8 +24,7 @@ object MaterializedView {
 
   private[graft] def viewOf(events: DataFrame): DataFrame =
     events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(27,6)")).as("total_dec"))
+      .agg(count(lit(1)).as("n"), Exact.sumDecimal(col("value")).as("total_dec"))
 
   /** Fold a delta's aggregate into the stored aggregate. */
   private[graft] def maintain(stored: DataFrame, delta: DataFrame): DataFrame =
@@ -76,7 +76,7 @@ object MaterializedView {
   private[graft] def dailyMv(events: DataFrame): DataFrame =
     events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(27,6)")).as("total_dec"),
+        Exact.sumDecimal(col("value")).as("total_dec"),
         // non-null count partial: what a rewritten AVG divides by
         // (the row count n over-divides when the measure has nulls)
         count(col("value")).as("n_value"),
@@ -98,12 +98,10 @@ object MaterializedView {
       dims = Map(
         MvRewrite.resolvedSql(base, col("event_type")) -> "event_type",
         MvRewrite.resolvedSql(base, to_date(col("ts"))) -> "day"),
-      sums = Map(
-        MvRewrite.resolvedSql(base, col("value").cast("decimal(27,6)")) -> "total_dec"),
+      sums = Map(MvRewrite.resolvedSql(base, Exact.decimal(col("value"))) -> "total_dec"),
       mins = Map(MvRewrite.resolvedSql(base, col("value")) -> "min_value"),
       maxs = Map(MvRewrite.resolvedSql(base, col("value")) -> "max_value"),
-      cnts = Map(
-        MvRewrite.resolvedSql(base, col("value").cast("decimal(27,6)")) -> "n_value"),
+      cnts = Map(MvRewrite.resolvedSql(base, Exact.decimal(col("value"))) -> "n_value"),
       countCol = Some("n"),
       dayDims = Map(MvRewrite.resolvedSql(base, col("ts")) -> "day"),
       // the decode chain (div, timestamp_micros, to_date) is
@@ -134,9 +132,9 @@ object MaterializedView {
         .filter(to_date($"ts") >= lit("2024-01-10") && $"event_type" =!= "error")
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
-          sum($"value".cast("decimal(27,6)")).as("total_dec"),
+          Exact.sumDecimal($"value").as("total_dec"),
           // native AVG exercises the sum/count-partial division rewrite
-          avg($"value".cast("decimal(27,6)")).as("avg_dec"),
+          avg(Exact.decimal($"value")).as("avg_dec"),
           min($"value").as("min_value"),
           max($"value").as("max_value"))
         .select($"event_type", $"n",

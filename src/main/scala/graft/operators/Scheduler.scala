@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Schedule/trigger cadence — the Mage trigger-config analog
@@ -164,11 +164,12 @@ object Scheduler {
     * owed tick — execution coalesces regardless of the catch-up
     * policy's LOG entries, like a scheduler draining a backlog into
     * one fresh build), with its dependency closure. The run log
-    * (pipeline, run_epoch) lands at `outRoot/_run_log` with replace
-    * semantics. Returns pipeline → rows materialized; triggers naming
-    * no model still log their owed ticks (externally-executed
-    * pipelines). Re-invoking with last_run advanced to the logged
-    * ticks owes nothing — idempotence is SchedulerSpec's contract. */
+    * (pipeline, run_epoch) replaces `outRoot/_run_log` in place through
+    * [[graft.sources.Ingest.writeAudited]], like the models beside it.
+    * Returns pipeline → rows materialized; triggers naming no model
+    * still log their owed ticks (externally-executed pipelines).
+    * Re-invoking with last_run advanced to the logged ticks owes
+    * nothing — idempotence is SchedulerSpec's contract. */
   def runDue(spark: SparkSession, sfDir: String, outRoot: String,
       triggers: Seq[Trigger] = triggerCatalog,
       now: String = FixedNow): Map[String, Long] = {
@@ -181,8 +182,8 @@ object Scheduler {
     val toRun = owed.map(_._1).distinct.filter(modelNames.contains)
     val counts = PipelineRunner.runSubset(spark, sfDir, outRoot, toRun)
     import spark.implicits._
-    owed.toSeq.toDF("pipeline", "run_epoch")
-      .write.mode(SaveMode.Overwrite).parquet(s"$outRoot/_run_log")
+    graft.sources.Ingest.writeAudited(
+      owed.toSeq.toDF("pipeline", "run_epoch"), s"$outRoot/_run_log")(_.count())
     counts
   }
 }

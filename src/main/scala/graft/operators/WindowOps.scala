@@ -31,7 +31,7 @@ object WindowOps {
     Tables.orders(spark, sfDir)
       .withColumn("order_seq", row_number().over(w))
       .withColumn("running_revenue",
-        sum($"o_totalprice".cast("decimal(27,6)"))
+        graft.functions.Exact.sumDecimal($"o_totalprice")
           .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .cast("double"))
       .withColumn("days_since_prev",
@@ -75,7 +75,7 @@ object WindowOps {
       .withColumn("ts_sec", unix_timestamp($"ts"))
       .select($"user_id", $"event_id", $"ts_sec", $"value",
         count(lit(1)).over(w).as("n_trailing_1h"),
-        sum($"value".cast("decimal(27,6)")).over(w).cast("double")
+        graft.functions.Exact.sumDecimal($"value").over(w).cast("double")
           .as("sum_trailing_1h"))
       .orderBy($"user_id", $"event_id")
   }

@@ -366,7 +366,7 @@ object Ingest {
     import org.apache.spark.sql.functions._
     df.groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
       .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast("decimal(27,6)")).as("revenue_dec"))
+        graft.functions.Exact.sumDecimal(col("o_totalprice")).as("revenue_dec"))
   }
 
   /** Gated query: an initial build from a STALE source (1-in-7 orders

@@ -229,8 +229,7 @@ object ManifestIndex {
         .filter(year($"o_orderdate") === 1997) // residual predicate
         .groupBy(date_format($"o_orderdate", "yyyy-MM").as("order_month"))
         .agg(count(lit(1)).as("n"),
-          sum($"o_totalprice".cast("decimal(27,6)"))
-            .cast("double").as("revenue"))
+          graft.functions.Exact.sumExact($"o_totalprice").as("revenue"))
         .orderBy($"order_month")
         // materialize before the temp table is deleted
         .transform(graft.plans.WindowAudit.checkpointAudited(

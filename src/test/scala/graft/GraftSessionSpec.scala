@@ -41,4 +41,12 @@ class GraftSessionSpec extends SparkSuite {
     val bad = offenders("Versioned.scala", "_commit_")
     assert(bad.isEmpty, bad.mkString("publish snapshots through Versioned.publish: ", ", ", ""))
   }
+
+  test("no src/main file but Exact.scala names the exact decimal type") {
+    // the quoted Scala cast and the DecimalType constructor; the DuckDB
+    // oracle SQL text (`CAST(x AS DECIMAL(27,6))`) is the independent
+    // reference and stays spelled out
+    val bad = offenders("Exact.scala", """"decimal\(27,\s*6\)"|DecimalType\(\s*27""")
+    assert(bad.isEmpty, bad.mkString("sum exactly through graft.functions.Exact: ", ", ", ""))
+  }
 }

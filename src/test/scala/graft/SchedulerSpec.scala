@@ -62,7 +62,13 @@ class SchedulerSpec extends SparkSuite {
     val sf = "/root/testdata/sf0.001"
     val t = Seq(Trigger("fct_trips", 15, "2024-03-01 00:05:00",
       Some("2024-03-01 11:20:00"), "all", enabled = true))
+    // the log is replaced in place through writeAudited: no staging or
+    // parked copy is left beside it after either call
+    def noLeftovers() = Seq("_run_log.staging", "_run_log.old").foreach { d =>
+      assert(!new java.io.File(s"$out/$d").exists, d)
+    }
     val counts = Scheduler.runDue(spark, sf, out, t)
+    noLeftovers()
     // fct_trips pulls its whole upstream closure
     assert(counts.keySet == PipelineRunner.models.map(_.name).toSet)
     assert(counts("fct_trips") > 0)
@@ -74,6 +80,7 @@ class SchedulerSpec extends SparkSuite {
     // advancing last_run to the newest logged tick owes nothing more
     val caughtUp = t.map(_.copy(lastRun = Some("2024-03-01 12:05:00")))
     assert(Scheduler.runDue(spark, sf, out, caughtUp).isEmpty)
+    noLeftovers()
     assert(spark.read.parquet(s"$out/_run_log").count() == 0)
   }
 
