@@ -8,13 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A dbt-style pipeline materializes each model as a TABLE and every
   * downstream consumer (queries, tests) reads the artifact — it never
   * re-derives the model per consumer. This helper is that semantic for
-  * an in-process engine: first request for a key computes + writes
-  * parquet under a per-process temp dir, later requests read it. The
-  * temp dir is per-JVM, so a fresh process always rebuilds from current
-  * inputs (no cross-run staleness), and corpus keys ([[sfKey]]) embed
-  * the canonical data directory and a fingerprint of its files, so
-  * distinct corpora never collide and a rewritten table rebuilds
-  * within the process too.
+  * an in-process engine. An artifact is one of two things:
+  *  - a table a run published ([[publish]]): `dbt run` writes the model
+  *    once and every later request for its key reads that table, so
+  *    `dbt test` checks the rows the run wrote;
+  *  - otherwise a scratch build ([[materialize]]): the first request for
+  *    a key computes and writes parquet under a per-process temp dir,
+  *    later requests read it.
+  * The registry and the temp dir are per-JVM, so a fresh process always
+  * rebuilds from current inputs (no cross-run staleness), and corpus
+  * keys ([[sfKey]]) embed the canonical data directory and a
+  * fingerprint of its files, so distinct corpora never collide and a
+  * rewritten table rebuilds within the process too.
   */
 object Staged {
 
@@ -25,8 +30,8 @@ object Staged {
     * fits, the band index next to the cluster chain) back-fill an
     * otherwise idle box. The old single `staged.synchronized` held the
     * global lock for the whole build, serializing every artifact. */
-  private final class Cell(build: () => String) {
-    lazy val path: String = build() // lazy-val init = per-cell monitor
+  private final class Cell(val dir: String)(build: () => Unit) {
+    lazy val path: String = { build(); dir } // lazy-val init = per-cell monitor
   }
   private val staged =
     new java.util.concurrent.ConcurrentHashMap[String, Cell]()
@@ -71,12 +76,13 @@ object Staged {
     * breadcrumb for perf triage (Bench/Verify parse tagged lines only,
     * so it is inert to both contracts). A build that throws records
     * nothing. */
-  private def timed(key: String)(build: => Unit): Unit = {
+  private def timed[T](key: String)(build: => T): T = {
     val t0 = System.nanoTime()
-    build
+    val result = build
     val secs = (System.nanoTime() - t0) / 1e9
     buildSecs.synchronized { buildSecs(key) = secs }
     println(f"[stage] built $key in $secs%.2f s")
+    result
   }
 
   private lazy val stageRoot = {
@@ -95,15 +101,39 @@ object Staged {
     * different artifacts may build at once. A build that THROWS leaves
     * its cell's lazy un-initialized, so a later request retries the
     * build (the old remove-on-failure semantic, preserved by lazy-val
-    * initialization rules). */
+    * initialization rules). A key some run [[publish]]ed reads that
+    * table; if the table has been deleted since, the key is built into
+    * scratch instead. */
   def materialize(key: String, spark: SparkSession)
       (build: => DataFrame): DataFrame = {
-    val cell = staged.computeIfAbsent(key, _ => new Cell(() => {
+    val cell = staged.computeIfAbsent(key, _ => {
       val p = s"$stageRoot/$key"
-      timed(key)(build.write.mode("overwrite").parquet(p))
-      p
-    }))
-    spark.read.parquet(cell.path)
+      new Cell(p)(() => timed(key)(build.write.mode("overwrite").parquet(p)))
+    })
+    val p = new org.apache.hadoop.fs.Path(cell.path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(cell.path)
+    else {
+      staged.remove(key, cell)
+      materialize(key, spark)(build)
+    }
+  }
+
+  /** Write `df` as the table at `dir` through
+    * [[graft.sources.Ingest.writeAudited]] and serve that table as
+    * artifact `key`, so the table a run publishes is the one its
+    * consumers read and the rows are written once. Any other key served
+    * from `dir` is dropped first: the write replaces its table. The
+    * write's seconds are recorded under `key` in [[buildTimes]]; a write
+    * or audit that throws registers nothing. Returns the audit's value. */
+  def publish[T](key: String, df: DataFrame, dir: String)(audit: DataFrame => T): T = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val table = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .makeQualified(path).toString
+    staged.values.removeIf(_.dir == table)
+    val result = timed(key)(graft.sources.Ingest.writeAudited(df, dir)(audit))
+    staged.put(key, new Cell(table)(() => ()))
+    result
   }
 
   /** Compute-once-per-JVM DIRECTORY artifact — the [[materialize]]
@@ -115,18 +145,19 @@ object Staged {
     * per-process temp root as the frame artifacts, so there is no
     * cross-run staleness and the shutdown hook reclaims everything. */
   def materializeDir(key: String)(build: String => Unit): String = {
-    staged.computeIfAbsent(s"dir_$key", _ => new Cell(() => {
+    staged.computeIfAbsent(s"dir_$key", _ => {
       val p = s"$stageRoot/dir_$key"
-      // a build that threw midway (cancelled job, disk full) leaves a
-      // partial tree at the fixed path with its cell's lazy
-      // un-initialized — clear it first so the RETRY re-runs against a
-      // clean slate instead of dying on 'path already exists'
-      // (directory builders write with the default ErrorIfExists;
-      // the frame twin above is overwrite-mode and needs no sweep)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      timed(s"dir_$key")(build(p))
-      p
-    })).path
+      new Cell(p)(() => {
+        // a build that threw midway (cancelled job, disk full) leaves a
+        // partial tree at the fixed path with its cell's lazy
+        // un-initialized — clear it first so the RETRY re-runs against a
+        // clean slate instead of dying on 'path already exists'
+        // (directory builders write with the default ErrorIfExists;
+        // the frame twin above is overwrite-mode and needs no sweep)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+        timed(s"dir_$key")(build(p))
+      })
+    }).path
   }
 
   /** Copy a staged directory artifact into a consumer-owned path (for

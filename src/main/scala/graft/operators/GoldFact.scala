@@ -26,9 +26,12 @@ import graft.sources.Tables
   *  - All derived metrics are `functions._` column expressions → one
   *    WholeStageCodegen span over the scan; no UDFs in the hot path.
   *
-  * The audit column `dbt_loaded_at = current_timestamp()` (F14) is added
-  * where the model is materialized ([[PipelineRunner]]); it is
-  * nondeterministic, so the verified query and the staged fact omit it.
+  * The audit column `dbt_loaded_at` (F14), one timestamp per run, is
+  * added where the model is written ([[PipelineRunner]]), as a one-row
+  * broadcast relation rather than a literal so the generated code stays
+  * the same across runs; it is nondeterministic, so the verified query
+  * and a scratch build of the fact omit it, and [[GoldStage.fact]]
+  * projects it away from a published table.
   */
 object GoldFact {
 
@@ -45,8 +48,8 @@ object GoldFact {
 
   /** The fact's join chain, deriving silver inline: every metric and
     * surrogate key plus the join intermediates. The model itself is
-    * this projected to [[verifiedColumns]] and staged
-    * ([[GoldStage.fact]]); specs assert plan shape on this builder. */
+    * this projected to [[verifiedColumns]] ([[GoldStage.rows]]); specs
+    * assert plan shape on this builder. */
   def build(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val silver = Silver.build(spark, sfDir)
@@ -136,7 +139,7 @@ object GoldFact {
   }
 
   /** The fact's deterministic public column set — what the verified
-    * query emits and what [[GoldStage.fact]] materializes (build
+    * query emits and what [[GoldStage.fact]] serves (build
     * intermediates like raw join keys stay out of the artifact).
     * Includes every column the quality suite's 13 fct checks read. */
   val verifiedColumns: Seq[String] = Seq(

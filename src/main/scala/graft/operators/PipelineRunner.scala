@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.current_timestamp
+import org.apache.spark.sql.functions.broadcast
+import graft.functions.Staged
+import graft.sources.Ingest
 
 /** The `dbt run` analog — the reference's main entry point (SURVEY §3
   * E1): a model DAG materialized in dependency order as tables.
@@ -23,28 +25,45 @@ import org.apache.spark.sql.functions.current_timestamp
   * once its siblings settle, and the later waves (its dependents) are
   * skipped.
   *
-  * `fct_trips` is the staged fact ([[GoldStage.fact]]) plus its audit
-  * column: the one fact build per corpus that `dbt test`
-  * ([[Quality.report]]) also reads, so a run followed by the quality
-  * suite builds the join chain once. Its deps are lineage (the `ref()`
-  * edges): they order the run and close `--select` subsets.
+  * `fct_trips` is the fact's rows ([[GoldStage.rows]]) plus its audit
+  * column, written once: the model publishes its table as the corpus's
+  * `Staged` artifact ([[graft.functions.Staged.publish]]), so `dbt test`
+  * ([[Quality.report]]) and the query surface read the table `dbt run`
+  * wrote, and a run followed by the quality suite builds the join chain
+  * once. Its deps are lineage (the `ref()` edges): they order the run
+  * and close `--select` subsets.
   */
 object PipelineRunner {
 
+  /** A model: its name, its `ref()` deps, its rows for a corpus dir, and
+    * the `Staged` key (for a corpus dir) its published table serves as,
+    * if consumers read it as an artifact. */
   case class Model(name: String, deps: Seq[String],
-      build: (SparkSession, String) => DataFrame)
+      build: (SparkSession, String) => DataFrame,
+      artifact: Option[String => String])
 
   /** The reference's six models, each built from the corpus dir. */
   def models: Seq[Model] = Seq(
-    Model("stg_trips_unified", Nil, Silver.build),
-    Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s)),
-    Model("dim_zone", Nil, GoldDims.dimZone),
-    Model("dim_payment_type", Nil, (s, _) => GoldDims.dimPaymentType(s)),
-    Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s)),
-    // F14: the audit column, nondeterministic, so not part of the staged fact
+    Model("stg_trips_unified", Nil, Silver.build, None),
+    Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s), None),
+    Model("dim_zone", Nil, GoldDims.dimZone, None),
+    Model("dim_payment_type", Nil, (s, _) => GoldDims.dimPaymentType(s), None),
+    Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s), None),
     Model("fct_trips",
       Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
-      (s, sf) => GoldStage.fact(s, sf).withColumn("dbt_loaded_at", current_timestamp())))
+      (s, sf) => loadedAt(GoldStage.rows(s, sf)), Some(GoldStage.key)))
+
+  /** F14: `df` plus `dbt_loaded_at`, one timestamp taken per
+    * model build. It reaches the rows as data, a one-row broadcast
+    * relation, not as a literal: Spark inlines a literal (what the SQL
+    * current-time functions fold to) into the generated code, so every
+    * build would compile its stage again. */
+  private def loadedAt(df: DataFrame): DataFrame = {
+    val s = df.sparkSession
+    import s.implicits._
+    df.crossJoin(broadcast(
+      Seq(java.sql.Timestamp.from(java.time.Instant.now())).toDF("dbt_loaded_at")))
+  }
 
   /** The models in dependency-depth waves, roots first: a model's depth
     * is one more than its deepest dep's. A cycle fails loudly. */
@@ -81,13 +100,18 @@ object PipelineRunner {
   }
 
   /** One [[graft.Concurrent.all]] per wave; a failed wave stops the
-    * later ones. Model -> materialized row count. */
+    * later ones. Each model is written once, through
+    * [[graft.sources.Ingest.writeAudited]]; a model with an artifact key
+    * publishes through [[graft.functions.Staged.publish]], which also
+    * registers its table under that key. Model -> materialized row
+    * count. */
   private[graft] def runModels(spark: SparkSession, sfDir: String, outRoot: String,
       ms: Seq[Model]): Map[String, Long] =
     waves(ms).flatMap { wave =>
       graft.Concurrent.all(spark, wave.map { m => m.name -> { () =>
-        m.name -> graft.sources.Ingest.writeAudited(
-          m.build(spark, sfDir), s"$outRoot/${m.name}")(_.count())
+        val (df, dir) = (m.build(spark, sfDir), s"$outRoot/${m.name}")
+        m.name -> m.artifact.fold(Ingest.writeAudited(df, dir)(_.count()))(
+          key => Staged.publish(key(sfDir), df, dir)(_.count()))
       }})
     }.toMap
 }

@@ -135,8 +135,9 @@ object Quality {
     val dimPayment = GoldDims.dimPaymentType(spark)
     val dimRate = GoldDims.dimRateCode(spark)
 
-    // the materialized fact, exactly how dbt test runs against the
-    // model's table rather than re-deriving the join chain per test
+    // the materialized fact (the fct_trips table a run published for
+    // this corpus, else a scratch build), exactly how dbt test runs
+    // against the model's table rather than re-deriving the join chain
     val fact = factChecks(GoldStage.fact(spark, sfDir), dimDate, dimZone)
 
     // ---- dims: not_null batched per dim (one tiny pass), unique ×5 ----

@@ -56,6 +56,17 @@ trait SparkSuite extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  /** Re-ingest the `lineitem` table of the corpus at `dir` as a strict
+    * subset of its rows (even order keys), as a rewriting load would. */
+  def halveLineitem(dir: String): Unit = {
+    val li = s"$dir/lineitem.parquet"
+    val subset = s"$dir/_lineitem_subset"
+    graft.sources.Tables.lineitem(spark, dir).filter(col("l_orderkey") % 2 === 0)
+      .write.parquet(subset)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(li))
+    org.apache.commons.io.FileUtils.moveDirectory(new java.io.File(subset), new java.io.File(li))
+  }
+
   /** Four partitions that each sleep 60 s: a Spark job that only
     * cancellation ends early. */
   def sleepyFrame(s: SparkSession): org.apache.spark.sql.DataFrame = {
@@ -161,25 +172,73 @@ class PipelineSpec extends SparkSuite {
 }
 
 class PipelineRunnerSpec extends SparkSuite {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+  import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+  import graft.functions.Staged
+
+  /** The SQL executions that write fact rows (a `fct_trips*` destination)
+    * while `body` runs. A marker job after `body` flushes the listener
+    * bus: events reach a listener in the order they were posted. */
+  private def factWrites(body: => Unit): Int = {
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val marker = s"fact-writes-${System.nanoTime}"
+    val dest = """Arguments: \S*/fct_trips[\w.\-]*""".r
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+              dest.findFirstIn(s.physicalPlanDescription).isDefined =>
+          writes.incrementAndGet(); ()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not flushed")
+      writes.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("dbt-run analog: DAG materializes in dependency order, replace semantics") {
     // outside the corpus dir: a write under it would change its key
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_run").toString
     try withSfCopy { dir =>
-      val factBuilds = () => graft.functions.Staged.buildTimes.keySet
-        .filter(_.startsWith("fct_trips_"))
+      val factBuilds = () => Staged.buildTimes.keySet.filter(_.startsWith("fct_trips_"))
       val before = factBuilds()
-      val counts = PipelineRunner.run(spark, dir, out)
+      var counts = Map.empty[String, Long]
+      val started = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.MILLIS)
+      // `dbt test` reads the fact `dbt run` wrote: one write for both
+      val writes = factWrites {
+        counts = PipelineRunner.run(spark, dir, out)
+        assert(Quality.report(spark, dir).collect().forall(_.getLong(1) == 0L))
+      }
+      val finished = java.time.Instant.now()
+      assert(writes == 1, s"$writes executions wrote fact rows")
       assert(counts("fct_trips") > 0)
       assert(counts("dim_date") == 2557)
       assert(counts.keySet == Set("stg_trips_unified", "dim_date", "dim_zone",
         "dim_payment_type", "dim_rate_code", "fct_trips"))
-      // `dbt test` reads the fact `dbt run` built: one build for both
-      assert(Quality.report(spark, dir).collect().forall(_.getLong(1) == 0L))
       assert((factBuilds() -- before).size == 1)
+      // every row of a run carries the run's one load time
+      def loadedAt() = spark.read.parquet(s"$out/fct_trips")
+        .select("dbt_loaded_at").distinct().collect().map(_.getTimestamp(0).toInstant)
+      val first = loadedAt()
+      assert(first.length == 1, first.mkString(", "))
+      assert(!first.head.isBefore(started) && !first.head.isAfter(finished),
+        s"${first.head} outside [$started, $finished]")
       // rerun = replace, not append
       val counts2 = PipelineRunner.run(spark, dir, out)
       assert(counts2 == counts)
+      val second = loadedAt()
+      assert(second.length == 1 && second.head.isAfter(first.head), second.mkString(", "))
       // fct read back from the materialized table: the model's public
       // columns plus the audit column, no join intermediates
       assert(spark.read.parquet(s"$out/fct_trips").columns.toSeq ==
@@ -187,12 +246,46 @@ class PipelineRunnerSpec extends SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("dbt test checks the fct_trips table dbt run wrote") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_test").toString
+    try withSfCopy { dir =>
+      PipelineRunner.run(spark, dir, out)
+      val table = s"$out/fct_trips"
+      val fct = spark.read.parquet(table)
+      val victim = fct.agg(min("trip_id")).head.getString(0)
+      graft.sources.Ingest.writeAudited(fct.withColumn("trip_id",
+        when(col("trip_id") === victim, lit(null)).otherwise(col("trip_id"))), table)(_.count())
+      val report = Quality.report(spark, dir).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(report("not_null_fct_trip_id") == 1L, report)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("no stale or dangling fact artifact: another corpus's publish, a deleted table") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_stale").toString
+    try withSfCopy { a => withSfCopy { b =>
+      halveLineitem(b) // corpus b: a strict subset of a's trips
+      val standaloneA = GoldStage.rows(spark, a).count()
+      assert(PipelineRunner.run(spark, a, out)("fct_trips") == standaloneA)
+      // b's fact replaces a's table: a is no longer served from it
+      val countB = PipelineRunner.run(spark, b, out)("fct_trips")
+      assert(countB < standaloneA)
+      val report = Quality.report(spark, a).collect()
+      assert(report.length == 32 && report.forall(_.getLong(1) == 0L), report.mkString(", "))
+      assert(GoldFact.fctTrips(spark, a).count() == standaloneA)
+      assert(GoldFact.fctTrips(spark, b).count() == countB)
+      // a deleted table is rebuilt, not read
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+      assert(GoldFact.fctTrips(spark, b).count() == countB)
+    }} finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("a failing model throws only after its siblings finish writing") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_fail").toString
     try {
       val ms = Seq(
-        PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom")),
-        PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }))
+        PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom"), None),
+        PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }, None))
       val e = intercept[RuntimeException](PipelineRunner.runModels(spark, sf, out, ms))
       assert(e.getMessage == "boom: boom" && e.getCause.getMessage == "boom")
       assert(new java.io.File(s"$out/slow/_SUCCESS").exists(),
@@ -203,11 +296,11 @@ class PipelineRunnerSpec extends SparkSuite {
   test("a model that fails mid-write leaves its last good table readable") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_keep").toString
     try {
-      val good = PipelineRunner.Model("trips", Nil, (s, _) => s.range(10).toDF())
+      val good = PipelineRunner.Model("trips", Nil, (s, _) => s.range(10).toDF(), None)
       assert(PipelineRunner.runModels(spark, sf, out, Seq(good)) == Map("trips" -> 10L))
       // the rerun's write fails inside a task, after the write has begun
       val bad = PipelineRunner.Model("trips", Nil, (s, _) =>
-        s.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id"))
+        s.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id"), None)
       val e = intercept[Exception](PipelineRunner.runModels(spark, sf, out, Seq(bad)))
       assert(e.getMessage.startsWith("trips: "), e.getMessage)
       assert(e.getMessage.contains("mid-write"), e.getMessage)
@@ -221,7 +314,7 @@ class PipelineRunnerSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_cancel").toString
     try assertInterruptCancels("sleepy") {
       PipelineRunner.runModels(spark, sf, out,
-        Seq(PipelineRunner.Model("sleepy", Nil, (s, _) => sleepyFrame(s))))
+        Seq(PipelineRunner.Model("sleepy", Nil, (s, _) => sleepyFrame(s), None)))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
@@ -741,17 +834,25 @@ class StagedSpec extends SparkSuite {
   test("a rewritten input table rebuilds the staged fact in the same JVM") {
     withSfCopy { dir =>
       val before = GoldFact.fctTrips(spark, dir).count()
-      // re-ingest lineitem as a strict subset of its rows
-      val li = s"$dir/lineitem.parquet"
-      val subset = s"$dir/_lineitem_subset"
-      graft.sources.Tables.lineitem(spark, dir).filter(col("l_orderkey") % 2 === 0)
-        .write.parquet(subset)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(li))
-      org.apache.commons.io.FileUtils.moveDirectory(
-        new java.io.File(subset), new java.io.File(li))
+      halveLineitem(dir)
       val after = GoldFact.fctTrips(spark, dir).count()
       assert(after < before, s"fact count $after after the rewrite, $before before")
     }
+  }
+
+  test("a publish that fails mid-write registers nothing") {
+    val out = java.nio.file.Files.createTempDirectory("graft_publish_fail").toString
+    try {
+      val bad = spark.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id")
+      val e = intercept[Exception](
+        graft.functions.Staged.publish("publish_probe", bad, s"$out/probe")(_.count()))
+      assert(String.valueOf(e.getMessage).contains("mid-write"), e)
+      assert(!graft.functions.Staged.buildTimes.contains("publish_probe"))
+      assert(!new java.io.File(s"$out/probe").exists())
+      // the key is not served from the failed table: it builds
+      assert(graft.functions.Staged.materialize("publish_probe", spark)(spark.range(3).toDF())
+        .count() == 3)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 }
 

@@ -67,21 +67,23 @@ class SchedulerSpec extends SparkSuite {
     def noLeftovers() = Seq("_run_log.staging", "_run_log.old").foreach { d =>
       assert(!new java.io.File(s"$out/$d").exists, d)
     }
-    val counts = Scheduler.runDue(spark, sf, out, t)
-    noLeftovers()
-    // fct_trips pulls its whole upstream closure
-    assert(counts.keySet == PipelineRunner.models.map(_.name).toSet)
-    assert(counts("fct_trips") > 0)
-    // owed ticks 11:35, 11:50, 12:05 are logged
-    val log = spark.read.parquet(s"$out/_run_log").collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
-    assert(log.toSeq == Seq("2024-03-01 11:35:00", "2024-03-01 11:50:00",
-      "2024-03-01 12:05:00").map(s => ("fct_trips", epoch(s))))
-    // advancing last_run to the newest logged tick owes nothing more
-    val caughtUp = t.map(_.copy(lastRun = Some("2024-03-01 12:05:00")))
-    assert(Scheduler.runDue(spark, sf, out, caughtUp).isEmpty)
-    noLeftovers()
-    assert(spark.read.parquet(s"$out/_run_log").count() == 0)
+    try {
+      val counts = Scheduler.runDue(spark, sf, out, t)
+      noLeftovers()
+      // fct_trips pulls its whole upstream closure
+      assert(counts.keySet == PipelineRunner.models.map(_.name).toSet)
+      assert(counts("fct_trips") > 0)
+      // owed ticks 11:35, 11:50, 12:05 are logged
+      val log = spark.read.parquet(s"$out/_run_log").collect()
+        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
+      assert(log.toSeq == Seq("2024-03-01 11:35:00", "2024-03-01 11:50:00",
+        "2024-03-01 12:05:00").map(s => ("fct_trips", epoch(s))))
+      // advancing last_run to the newest logged tick owes nothing more
+      val caughtUp = t.map(_.copy(lastRun = Some("2024-03-01 12:05:00")))
+      assert(Scheduler.runDue(spark, sf, out, caughtUp).isEmpty)
+      noLeftovers()
+      assert(spark.read.parquet(s"$out/_run_log").count() == 0)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("runSubset rejects unknown model names") {
