@@ -16,12 +16,32 @@ import org.apache.spark.sql.types.DecimalType
   * bit-identical, which is what the driver's hash compare needs.
   *
   * The only Scala code that names the exact type (`GraftSessionSpec`
-  * guards it): every Spark-side exact sum is [[sumDecimal]] or built on
-  * it, so the aggregate can be swapped in one place.
+  * guards it): every Spark-side exact sum is built here, so the
+  * aggregate can be swapped in one place.
   *
-  * At 100 TB this costs one decimal widening per row in the partial
-  * aggregate — still codegen'd, still map-side combined; it does not add
-  * a shuffle or break WholeStageCodegen.
+  * The cast costs a `Double.toString` and a `BigDecimal` rounding per
+  * row, so [[sumExact]] takes most rows on a long fast path instead,
+  * built from built-in functions only (still codegen'd and map-side
+  * combined). Let `y = x * 1e6` (one IEEE multiply) and call a row fast
+  * when `|y| < 2^43` and `|y - floor(y) - 0.5| > 2^-8`. For a fast row
+  * the cast's HALF_UP result, in millionths, is `u = floor(y + 0.5)`:
+  *
+  *  - `Double.toString(x)` parses back to `x`, so its decimal `s` is
+  *    within `ulp(x)/2` of `x`, and `10^6 * ulp(x) < 2 ulp(y)`; with
+  *    `y`'s own rounding, `|s * 10^6 - y| < 1.5 ulp(y) <= 1.5 * 2^-10`
+  *    below 2^43, inside the 2^-8 margin. So `s * 10^6` and `y` lie on
+  *    the same side of every half-integer and round to the same integer;
+  *    no tie can be fast, so the rounding mode does not matter.
+  *  - `y - floor(y) - 0.5` is exact, and `y + 0.5`, at most one ulp
+  *    off, stays more than the margin from an integer.
+  *
+  * The fast `u` are summed as two longs (`u >> 21` and `u & (2^21 - 1)`,
+  * exact below 2^41 rows). Every other non-null row (ties, `|x|` at or
+  * above 2^43 / 10^6 ~ 8.8e6, NaN, +-Inf) goes through the cast, so it
+  * rounds, overflows and fails (or, for NaN and +-Inf, turns NULL)
+  * exactly as the SQL text. The parts meet
+  * in one decimal, the same value as the all-cast sum, so the double
+  * is the same.
   */
 object Exact {
 
@@ -35,8 +55,31 @@ object Exact {
     * windowed through `.over(w)`. */
   def sumDecimal(c: Column): Column = sum(decimal(c))
 
-  /** Order-independent SUM of a double column, exact to 6 decimal places. */
-  def sumExact(c: Column): Column = sumDecimal(c).cast("double")
+  private val loBits = 21
+  private def millionths(c: Column): Column = c * lit(1e6)
+
+  /** True where `decimal(c)`, in millionths, is `floor(c * 1e6 + 0.5)`
+    * (see the proof above); never true for NULL, NaN and +-Inf. */
+  private[graft] def fast(c: Column): Column = {
+    val y = millionths(c)
+    abs(y) < lit(math.pow(2, 43)) && abs(y - floor(y) - lit(0.5)) > lit(math.pow(2, -8))
+  }
+
+  /** Order-independent SUM of a double column, exact to 6 decimal places.
+    * An expression over several aggregates: use it inside `agg`, and
+    * [[sumDecimal]] for partials and windows. */
+  def sumExact(c: Column): Column = {
+    val isFast = fast(c)
+    val u = floor(millionths(c) + lit(0.5))
+    val hi = sum(when(isFast, shiftright(u, loBits)))
+    val lo = sum(when(isFast, u.bitwiseAND(lit((1L << loBits) - 1))))
+    val slow = sum(when(c.isNotNull && !isFast, decimal(c)))
+    // NULL exactly when the group has no fast row (hi and lo go together)
+    val fastSum = (hi.cast(DecimalType(38, 0)) * lit(1L << loBits) + lo) *
+      lit(new java.math.BigDecimal("0.000001"))
+    coalesce(fastSum + coalesce(slow, lit(0)), slow)
+      .cast(DecimalType(37, 6)).cast("double")
+  }
 
   /** Order-independent AVG: exact decimal sum, one IEEE division at the end. */
   def avgExact(c: Column): Column = sumExact(c) / count(c)

@@ -21,8 +21,15 @@ import graft.operators.Analytics
   *    value = hour + 1, ts stored as un-annotated INT64 micros (also
   *    exercises the footer-min unit inference).
   */
-class EvidenciasValueSpec extends SparkSuite {
+class EvidenciasValueSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
+
+  /** The fixture's directory, once [[dir]] has made it. */
+  private var made: Option[String] = None
+
+  override def afterAll(): Unit =
+    try made.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    finally super.afterAll()
 
   private def ts(s: String) =
     java.sql.Timestamp.from(java.time.Instant.parse(s))
@@ -30,6 +37,7 @@ class EvidenciasValueSpec extends SparkSuite {
 
   private lazy val dir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft_taxi_micro_").toString
+    made = Some(d)
     Seq((0, "Manhattan"), (1, "Queens"))
       .toDF("r_regionkey", "r_name").write.parquet(s"$d/region.parquet")
     Seq((0, "Midtown", 0), (1, "Harlem", 0), (2, "Astoria", 1), (3, "Unknown", 1))

@@ -9,7 +9,7 @@ class ForgetSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshTable() = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_forget_spec_").toString
+    val tmp = tempDir("graft_forget_spec_")
     Forget.setup(spark, sf, tmp)
   }
 

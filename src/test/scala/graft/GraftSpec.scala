@@ -45,6 +45,24 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 
+  /** Directories [[tempDir]] made during the running test. */
+  private val testDirs = scala.collection.mutable.ArrayBuffer[java.io.File]()
+
+  /** A fresh `prefix*` directory under `java.io.tmpdir`, deleted when
+    * the test that made it ends, whatever its outcome. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    testDirs.synchronized(testDirs += dir)
+    dir.getPath
+  }
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally testDirs.synchronized {
+      testDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      testDirs.clear()
+    }
+
   /** `body` over a private copy of [[sf]], deleted afterwards: its
     * staged artifacts are new to this JVM, and its tables may be
     * rewritten. */
@@ -673,9 +691,8 @@ class StreamingSpec extends SparkSuite {
   test("incremental ingest: each run picks up only new files, exactly once") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val base = "/tmp/graft_incremental"
+    val base = tempDir("graft_incremental")
     val (landing, bronze, ckpt) = (s"$base/landing", s"$base/bronze", s"$base/ckpt")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     graft.sources.Tables.prepareEvents(spark, "/root/testdata/sf0.001/events.parquet")
     val src = spark.read.schema(graft.sources.Tables.eventsRaw)
       .parquet("/root/testdata/sf0.001/events.parquet")
@@ -724,7 +741,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming dedup collapses duplicated arrivals to the batch-distinct result") {
     import spark.implicits._
-    val landing = java.nio.file.Files.createTempDirectory("graft_dedup_stream_").toString
+    val landing = tempDir("graft_dedup_stream_")
     // the same RAW source delivered twice (a re-downloaded month /
     // retried batch — every event_id arrives exactly two times)
     graft.sources.Tables.prepareEvents(spark, "/root/testdata/sf0.001/events.parquet")
@@ -796,7 +813,7 @@ class IngestSpec extends SparkSuite {
       assert(graft.sources.Ingest.available(s"$base/data/nation.parquet"))
       assert(!graft.sources.Ingest.available(s"$base/data/missing_2099-01.parquet"))
       // S5: fetch streams to local, is idempotent, and the result scans
-      val dir = java.nio.file.Files.createTempDirectory("graft_fetch_").toString
+      val dir = tempDir("graft_fetch_")
       val local = graft.sources.Ingest.fetch(s"$base/data/nation.parquet", dir)
       assert(java.nio.file.Files.size(java.nio.file.Paths.get(local)) == payload.length)
       val again = graft.sources.Ingest.fetch(s"$base/data/nation.parquet", dir)

@@ -19,7 +19,7 @@ class OrcSourceSpec extends SparkSuite {
       .coalesce(1).write.orc(dir)
 
   test("filter is pushed into the ORC scan and columns are pruned") {
-    val dir = Files.createTempDirectory("graft_orc_spec").toString + "/t"
+    val dir = tempDir("graft_orc_spec") + "/t"
     writeSample(dir)
     val df = spark.read.orc(dir).filter($"id" > 1L).select($"tag")
     df.collect()
@@ -38,7 +38,7 @@ class OrcSourceSpec extends SparkSuite {
   }
 
   test("timestamps round-trip ORC exactly, including pre-epoch values") {
-    val dir = Files.createTempDirectory("graft_orc_spec").toString + "/t"
+    val dir = tempDir("graft_orc_spec") + "/t"
     writeSample(dir)
     val back = spark.read.orc(dir).orderBy($"id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),

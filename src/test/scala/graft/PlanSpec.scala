@@ -166,7 +166,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("clustered layout: partition pruning reads only the filtered year") {
-    val dir = "/tmp/graft_plan_spec_clustered"
+    val dir = tempDir("graft_plan_spec_clustered")
     ClusteredLayout.writeClustered(spark, sf, dir)
     val pruned = ClusteredLayout.readClustered(spark, dir)
     val plan = pruned.queryExecution.executedPlan.toString
@@ -179,7 +179,7 @@ class PlanSpec extends SparkSuite {
 
   test("dynamic partition pruning: runtime dim filter prunes fact partitions") {
     import spark.implicits._
-    val dir = "/tmp/graft_plan_spec_dpp"
+    val (dir, dimDir) = (tempDir("graft_plan_spec_dpp"), tempDir("graft_plan_spec_dpp-dim"))
     ClusteredLayout.writeClustered(spark, sf, dir)
     // the year filter lives on the DIM side only — the fact's partition
     // filter must be injected at runtime (DPP), not statically. Two
@@ -189,8 +189,8 @@ class PlanSpec extends SparkSuite {
     // (a boolean flag simplifies to a bare attribute, which fails
     // isLikelySelective).
     (1995 to 2001).map(y => (y, if (y == 2000) "target" else "other"))
-      .toDF("y", "label").write.mode("overwrite").parquet(s"$dir-dim")
-    val dim = spark.read.parquet(s"$dir-dim").filter($"label" === "target")
+      .toDF("y", "label").write.mode("overwrite").parquet(dimDir)
+    val dim = spark.read.parquet(dimDir).filter($"label" === "target")
     // aggregate real data columns — a partition-column-only scan has ~0
     // estimated size and DPP's benefit check would skip the filter
     val q = spark.read.parquet(dir)
@@ -522,7 +522,7 @@ class SourceFormatsSpec extends SparkSuite {
   test("bronze round-trips through parquet, orc, json with identical contents") {
     val src = graft.sources.Tables.nation(spark, sf)
     Seq("parquet", "orc", "json").foreach { fmt =>
-      val back = graft.sources.Ingest.writeBronze(src, s"/tmp/graft_fmt_$fmt", fmt)
+      val back = graft.sources.Ingest.writeBronze(src, tempDir(s"graft_fmt_$fmt"), fmt)
       assert(back.exceptAll(src).count() == 0, fmt)
       assert(src.exceptAll(back).count() == 0, fmt)
     }
@@ -530,9 +530,10 @@ class SourceFormatsSpec extends SparkSuite {
 
   test("text source reads raw lines") {
     import spark.implicits._
+    val dir = tempDir("graft_fmt_text")
     graft.sources.Tables.region(spark, sf).select($"r_name")
-      .coalesce(1).write.mode("overwrite").text("/tmp/graft_fmt_text")
-    assert(spark.read.text("/tmp/graft_fmt_text").count() == 5)
+      .coalesce(1).write.mode("overwrite").text(dir)
+    assert(spark.read.text(dir).count() == 5)
   }
 }
 
@@ -540,7 +541,7 @@ class CsvSourceSpec extends SparkSuite {
 
   test("CSV source: header + uppercase normalization round-trip (S5)") {
     import spark.implicits._
-    val dir = "/tmp/graft_csv_spec"
+    val dir = tempDir("graft_csv_spec")
     // build a zones-lookup-like CSV from the nation table
     graft.sources.Tables.nation(spark, sf)
       .select($"n_nationkey".as("locationid"), $"n_name".as("zone"))

@@ -36,7 +36,7 @@ class StreamRecoverySpec extends SparkSuite {
     .select($"window.start".as("ws"), $"n", $"total")
 
   test("append-mode windowed agg resumes from checkpoint exactly-once") {
-    val root = Files.createTempDirectory("graft_recovery").toFile.getAbsolutePath
+    val root = tempDir("graft_recovery")
     val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     new java.io.File(in).mkdirs()
 

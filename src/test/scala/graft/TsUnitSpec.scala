@@ -70,7 +70,7 @@ class TsUnitSpec extends SparkSuite {
 
   test("NANOS, MICROS and MILLIS files decode to identical timestamps") {
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    val work = java.nio.file.Files.createTempDirectory("graft_tsunit_").toString
+    val work = tempDir("graft_tsunit_")
     def mk(name: String) = { val d = s"$work/$name"; new java.io.File(d).mkdirs(); d }
     // second-aligned instants so every unit represents them exactly
     val nanos  = writeEvents(mk("nanos"),  Some(TimeUnit.NANOS),  i => (baseSec + i * 60) * 1000000000L)
@@ -91,13 +91,13 @@ class TsUnitSpec extends SparkSuite {
     // same session. The footer stats identify the unit unambiguously
     // (disjoint plausibility windows), so inference must win over a
     // stale pin — in both directions.
-    val work = java.nio.file.Files.createTempDirectory("graft_tsunit_raw_").toString
+    val work = tempDir("graft_tsunit_raw_")
     val rawMicros = writeEvents(work, None, i => (baseSec + i) * 1000000L)
     assert(Tables.probeEventsTsUnit(spark, rawMicros)._1 == "NONE")
     spark.conf.set(Tables.TsUnitKey, "NANOS")
     assert(Tables.prepareEvents(spark, rawMicros) == "MICROS")
     val rawNanos = writeEvents(
-      java.nio.file.Files.createTempDirectory("graft_tsunit_raw2_").toString,
+      tempDir("graft_tsunit_raw2_"),
       None, i => (baseSec + i) * 1000000000L)
     spark.conf.set(Tables.TsUnitKey, "MICROS")
     assert(Tables.prepareEvents(spark, rawNanos) == "NANOS")
@@ -108,7 +108,7 @@ class TsUnitSpec extends SparkSuite {
     // would decode a NANOS-era copy 1000x off with no tripwire. The
     // plausibility windows of the three units never overlap, so the
     // footer min identifies the unit — or prepare fails loudly.
-    val work = java.nio.file.Files.createTempDirectory("graft_tsunit_fresh_").toString
+    val work = tempDir("graft_tsunit_fresh_")
     def mk(name: String) = { val d = s"$work/$name"; new java.io.File(d).mkdirs(); d }
     val rawNanos = writeEvents(mk("n"), None, i => (baseSec + i) * 1000000000L)
     val rawMicros = writeEvents(mk("u"), None, i => (baseSec + i) * 1000000L)
@@ -129,7 +129,7 @@ class TsUnitSpec extends SparkSuite {
 
   test("tripwire: implausible footer min fails loudly with the footer unit") {
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    val work = java.nio.file.Files.createTempDirectory("graft_tsunit_bad_").toString
+    val work = tempDir("graft_tsunit_bad_")
     // values that would be plausible as MICROS, but the file says NANOS:
     // exactly the r4 fixture-drift shape, caught at prepare time now
     val bad = writeEvents(work, Some(TimeUnit.NANOS), i => (baseSec + i) * 1000000L)
@@ -146,7 +146,7 @@ class TsUnitSpec extends SparkSuite {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    val work = java.nio.file.Files.createTempDirectory("graft_tsunit_ord_").toString
+    val work = tempDir("graft_tsunit_ord_")
     val schema = Types.buildMessage()
       .required(INT64).named("o_orderkey")
       .required(INT64).named("o_custkey")

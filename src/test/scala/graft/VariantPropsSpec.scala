@@ -45,7 +45,7 @@ class VariantPropsSpec extends SparkSuite {
     // semi-structured props as VARIANT must get identical extractions
     // after a write/read hop — otherwise staging silently changes
     // semantics vs. the in-memory path.
-    val dir = java.nio.file.Files.createTempDirectory("graft_variant_rt").toString + "/t"
+    val dir = tempDir("graft_variant_rt") + "/t"
     val rows = Seq(
       """{"k": 7, "nest": {"a": [1, 2, 3]}, "s": "x"}""",
       """{"k": -2, "nest": {"a": []}, "s": ""}""",

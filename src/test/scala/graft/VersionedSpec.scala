@@ -8,7 +8,7 @@ class VersionedSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmpTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_vspec_").toString + "/tbl"
+    tempDir("graft_vspec_") + "/tbl"
 
   test("publish assigns dense versions and read() time-travels exactly") {
     val dir = tmpTable()
