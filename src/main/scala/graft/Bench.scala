@@ -71,7 +71,7 @@ object Bench {
         val d = warm.toString
         try {
           graft.functions.DedupStage.prebuild(spark, d)
-          operators.GoldStage.fact(spark, d).count()
+          operators.PipelineRunner.table(spark, d, "fct_trips").count()
           operators.BasketStage.prebuild(spark, d)
           graft.functions.QualityModel.prebuild(spark, d)
           graft.functions.Fuzzy.supplierPairs(spark, d).count()
@@ -125,7 +125,7 @@ object Bench {
       results("bench_dedup_stage_build") =
         time(graft.functions.DedupStage.prebuild(spark, sfDir))
       results("bench_fact_stage_build") =
-        time { operators.GoldStage.fact(spark, sfDir).count(); () }
+        time { operators.PipelineRunner.table(spark, sfDir, "fct_trips").count(); () }
       results("bench_basket_stage_build") =
         time(operators.BasketStage.prebuild(spark, sfDir))
       results("bench_model_stage_build") =

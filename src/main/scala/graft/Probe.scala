@@ -42,7 +42,7 @@ object Probe {
     // Bench does (single run — the artifact persists afterwards)
     val stages = Map[String, () => Unit](
       "prebuild:dedup" -> (() => graft.functions.DedupStage.prebuild(spark, sfDir)),
-      "prebuild:fact" -> (() => { operators.GoldStage.fact(spark, sfDir).count(); () }),
+      "prebuild:fact" -> (() => { operators.PipelineRunner.table(spark, sfDir, "fct_trips").count(); () }),
       "prebuild:basket" -> (() => operators.BasketStage.prebuild(spark, sfDir)),
       "prebuild:model" -> (() => graft.functions.QualityModel.prebuild(spark, sfDir)))
     args.tail.foreach { q =>

@@ -37,11 +37,13 @@ import org.apache.spark.sql.types.DecimalType
   *
   * The fast `u` are summed as two longs (`u >> 21` and `u & (2^21 - 1)`,
   * exact below 2^41 rows). Every other non-null row (ties, `|x|` at or
-  * above 2^43 / 10^6 ~ 8.8e6, NaN, +-Inf) goes through the cast, so it
-  * rounds, overflows and fails (or, for NaN and +-Inf, turns NULL)
-  * exactly as the SQL text. The parts meet
-  * in one decimal, the same value as the all-cast sum, so the double
-  * is the same.
+  * above 2^43 / 10^6 ~ 8.8e6) goes through the cast, so it rounds,
+  * overflows and fails exactly as the SQL text. The parts meet in one
+  * decimal, the same value as the all-cast sum, so the double is the
+  * same. NaN and +-Inf fail the sum with [[NonFinite]], as the oracle's
+  * cast fails on them; Spark's own cast would turn them NULL (even
+  * under ANSI), dropping the row from the sum while `count` still
+  * counts it. [[sumDecimal]] keeps Spark's cast and so still drops them.
   */
 object Exact {
 
@@ -54,6 +56,9 @@ object Exact {
     * merged again (MV, salted, IVM), ranked before the double cast, or
     * windowed through `.over(w)`. */
   def sumDecimal(c: Column): Column = sum(decimal(c))
+
+  /** The error a NaN or +-Inf row raises in [[sumExact]]. */
+  val NonFinite = "Exact.sumExact: NaN or Infinity has no DECIMAL(27,6) value"
 
   private val loBits = 21
   private def millionths(c: Column): Column = c * lit(1e6)
@@ -73,7 +78,9 @@ object Exact {
     val u = floor(millionths(c) + lit(0.5))
     val hi = sum(when(isFast, shiftright(u, loBits)))
     val lo = sum(when(isFast, u.bitwiseAND(lit((1L << loBits) - 1))))
-    val slow = sum(when(c.isNotNull && !isFast, decimal(c)))
+    val slow = sum(when(c.isNotNull && !isFast,
+      when(isnan(c) || abs(c) === lit(Double.PositiveInfinity), raise_error(lit(NonFinite)))
+        .otherwise(decimal(c))))
     // NULL exactly when the group has no fast row (hi and lo go together)
     val fastSum = (hi.cast(DecimalType(38, 0)) * lit(1L << loBits) + lo) *
       lit(new java.math.BigDecimal("0.000001"))

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Compute-once-per-JVM materialized artifacts: the generic machinery
-  * behind [[DedupStage]] and [[graft.operators.GoldStage]].
+  * behind [[DedupStage]] and the dbt models
+  * ([[graft.operators.PipelineRunner.table]]).
   *
   * A dbt-style pipeline materializes each model as a TABLE and every
   * downstream consumer (queries, tests) reads the artifact — it never
@@ -122,15 +123,19 @@ object Staged {
   /** Write `df` as the table at `dir` through
     * [[graft.sources.Ingest.writeAudited]] and serve that table as
     * artifact `key`, so the table a run publishes is the one its
-    * consumers read and the rows are written once. Any other key served
-    * from `dir` is dropped first: the write replaces its table. The
-    * write's seconds are recorded under `key` in [[buildTimes]]; a write
-    * or audit that throws registers nothing. Returns the audit's value. */
+    * consumers read and the rows are written once. Every key served
+    * from `dir` is dropped first, with its [[buildTimes]] entry: the
+    * write replaces its table, so republishing one directory after an
+    * input rewrite leaves one cell and one entry, not one per input
+    * state. The write's seconds are recorded under `key`; a write or
+    * audit that throws registers nothing. Returns the audit's value. */
   def publish[T](key: String, df: DataFrame, dir: String)(audit: DataFrame => T): T = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val table = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
       .makeQualified(path).toString
-    staged.values.removeIf(_.dir == table)
+    staged.forEach { (k, cell) =>
+      if (cell.dir == table && staged.remove(k, cell)) buildSecs.synchronized { buildSecs -= k }
+    }
     val result = timed(key)(graft.sources.Ingest.writeAudited(df, dir)(audit))
     staged.put(key, new Cell(table)(() => ()))
     result

@@ -30,8 +30,7 @@ import graft.sources.Tables
   * added where the model is written ([[PipelineRunner]]), as a one-row
   * broadcast relation rather than a literal so the generated code stays
   * the same across runs; it is nondeterministic, so the verified query
-  * and a scratch build of the fact omit it, and [[GoldStage.fact]]
-  * projects it away from a published table.
+  * omits it and [[fctTrips]] projects it away from the model's table.
   */
 object GoldFact {
 
@@ -48,8 +47,8 @@ object GoldFact {
 
   /** The fact's join chain, deriving silver inline: every metric and
     * surrogate key plus the join intermediates. The model itself is
-    * this projected to [[verifiedColumns]] ([[GoldStage.rows]]); specs
-    * assert plan shape on this builder. */
+    * this projected to [[verifiedColumns]] ([[PipelineRunner.models]]);
+    * specs assert plan shape on this builder. */
   def build(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val silver = Silver.build(spark, sfDir)
@@ -139,8 +138,8 @@ object GoldFact {
   }
 
   /** The fact's deterministic public column set — what the verified
-    * query emits and what [[GoldStage.fact]] serves (build
-    * intermediates like raw join keys stay out of the artifact).
+    * query emits and what the `fct_trips` model writes besides its
+    * audit column (build intermediates like raw join keys stay out).
     * Includes every column the quality suite's 13 fct checks read. */
   val verifiedColumns: Seq[String] = Seq(
     "trip_id", "service_type", "order_key", "line_number",
@@ -152,12 +151,13 @@ object GoldFact {
     "is_rush_hour", "is_night_trip", "has_data_quality_issue")
 
   /** Verified query: deterministic projection of the fact, total-ordered.
-    * Reads the MATERIALIZED fact ([[GoldStage.fact]]) — the dbt
+    * Reads the MATERIALIZED fact ([[PipelineRunner.table]]) — the dbt
     * table-read semantic, shared with the quality suite; the join-chain
     * plan itself is asserted on [[build]] in PlanSpec. */
   def fctTrips(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GoldStage.fact(spark, sfDir)
+    PipelineRunner.table(spark, sfDir, "fct_trips")
+      .select(verifiedColumns.map(col): _*)
       .orderBy($"order_key", $"line_number")
   }
 

@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.functions.{broadcast, col}
 import graft.functions.Staged
-import graft.sources.Ingest
 
 /** The `dbt run` analog — the reference's main entry point (SURVEY §3
   * E1): a model DAG materialized in dependency order as tables.
@@ -15,43 +14,53 @@ import graft.sources.Ingest
   *
   * Spark shape: each model is a `DataFrame`-producing function; deps are
   * an explicit edge list; materialization is a parquet table at
-  * `outRoot/<model>`, replaced through [[graft.sources.Ingest.writeAudited]]
-  * (the `CREATE OR REPLACE TABLE` analog): the model writes to staging,
-  * the audit counts the staged rows, and only then is the old table
-  * swapped out, so a model that fails mid-write leaves its last good
-  * table readable. The DAG runs in dependency-depth waves
-  * (roots, then `fct_trips`), each one [[graft.Concurrent.all]] call
-  * (the dbt `threads` analog): a failing model fails its wave, named,
-  * once its siblings settle, and the later waves (its dependents) are
-  * skipped.
+  * `outRoot/<model>`, published through
+  * [[graft.functions.Staged.publish]] (the `CREATE OR REPLACE TABLE`
+  * analog): the model writes to staging, the audit counts the staged
+  * rows, and only then is the old table swapped out, so a model that
+  * fails mid-write leaves its last good table readable. The DAG runs in
+  * dependency-depth waves (roots, then `fct_trips`), each one
+  * [[graft.Concurrent.all]] call (the dbt `threads` analog): a failing
+  * model fails its wave, named, once its siblings settle, and the later
+  * waves (its dependents) are skipped.
   *
-  * `fct_trips` is the fact's rows ([[GoldStage.rows]]) plus its audit
-  * column, written once: the model publishes its table as the corpus's
-  * `Staged` artifact ([[graft.functions.Staged.publish]]), so `dbt test`
-  * ([[Quality.report]]) and the query surface read the table `dbt run`
-  * wrote, and a run followed by the quality suite builds the join chain
-  * once. Its deps are lineage (the `ref()` edges): they order the run
-  * and close `--select` subsets.
+  * Every model is written once and is its corpus's artifact: the
+  * published table serves the key `<model>_<sfKey>`, so `dbt test`
+  * ([[Quality.report]]) and the query surface read the tables `dbt run`
+  * wrote, through [[table]]. With no run before them (the `dbt test`
+  * CLI, the oracle-gated queries) [[table]] builds the model into
+  * scratch once. `fct_trips` still builds from the sources; its deps
+  * are lineage (the `ref()` edges): they order the run and close
+  * `--select` subsets.
   */
 object PipelineRunner {
 
-  /** A model: its name, its `ref()` deps, its rows for a corpus dir, and
-    * the `Staged` key (for a corpus dir) its published table serves as,
-    * if consumers read it as an artifact. */
+  /** A model: its name, its `ref()` deps and its rows for a corpus dir. */
   case class Model(name: String, deps: Seq[String],
-      build: (SparkSession, String) => DataFrame,
-      artifact: Option[String => String])
+      build: (SparkSession, String) => DataFrame)
 
-  /** The reference's six models, each built from the corpus dir. */
+  /** The reference's six models, each built from the corpus dir. The
+    * fact is [[GoldFact.build]] projected to [[GoldFact.verifiedColumns]]
+    * (the raw build also carries every join intermediate) plus its
+    * audit column. */
   def models: Seq[Model] = Seq(
-    Model("stg_trips_unified", Nil, Silver.build, None),
-    Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s), None),
-    Model("dim_zone", Nil, GoldDims.dimZone, None),
-    Model("dim_payment_type", Nil, (s, _) => GoldDims.dimPaymentType(s), None),
-    Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s), None),
+    Model("stg_trips_unified", Nil, Silver.build),
+    Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s)),
+    Model("dim_zone", Nil, GoldDims.dimZone),
+    Model("dim_payment_type", Nil, (s, _) => GoldDims.dimPaymentType(s)),
+    Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s)),
     Model("fct_trips",
       Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
-      (s, sf) => loadedAt(GoldStage.rows(s, sf)), Some(GoldStage.key)))
+      (s, sf) => loadedAt(GoldFact.build(s, sf).select(GoldFact.verifiedColumns.map(col): _*))))
+
+  /** Model `name`'s table for the corpus at `sfDir`: the table a run
+    * published for this corpus state, or else a scratch build, read as
+    * parquet. Consumers project the columns they read (the fact also
+    * carries `dbt_loaded_at`); parquet prunes the rest. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val m = models.find(_.name == name).getOrElse(sys.error(s"unknown model $name"))
+    Staged.materialize(s"${name}_${Staged.sfKey(sfDir)}", spark)(m.build(spark, sfDir))
+  }
 
   /** F14: `df` plus `dbt_loaded_at`, one timestamp taken per
     * model build. It reaches the rows as data, a one-row broadcast
@@ -100,18 +109,17 @@ object PipelineRunner {
   }
 
   /** One [[graft.Concurrent.all]] per wave; a failed wave stops the
-    * later ones. Each model is written once, through
-    * [[graft.sources.Ingest.writeAudited]]; a model with an artifact key
-    * publishes through [[graft.functions.Staged.publish]], which also
-    * registers its table under that key. Model -> materialized row
-    * count. */
+    * later ones. Each model is written once and published as its
+    * corpus's artifact ([[graft.functions.Staged.publish]]). Model ->
+    * materialized row count. */
   private[graft] def runModels(spark: SparkSession, sfDir: String, outRoot: String,
-      ms: Seq[Model]): Map[String, Long] =
+      ms: Seq[Model]): Map[String, Long] = {
+    val sfKey = Staged.sfKey(sfDir)
     waves(ms).flatMap { wave =>
       graft.Concurrent.all(spark, wave.map { m => m.name -> { () =>
-        val (df, dir) = (m.build(spark, sfDir), s"$outRoot/${m.name}")
-        m.name -> m.artifact.fold(Ingest.writeAudited(df, dir)(_.count()))(
-          key => Staged.publish(key(sfDir), df, dir)(_.count()))
+        m.name -> Staged.publish(s"${m.name}_$sfKey", m.build(spark, sfDir),
+          s"$outRoot/${m.name}")(_.count())
       }})
     }.toMap
+  }
 }

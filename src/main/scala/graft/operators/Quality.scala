@@ -24,25 +24,84 @@ import org.apache.spark.sql.functions._
   * engine's stronger invariant that OUR key construction is in fact
   * unique on the testdata lives in PipelineSpec, not in this suite.
   *
+  * The catalogue ([[catalogue]]) declares every check once, as a
+  * schema.yml block per model: the model, the label its check names
+  * carry, the model's oracle SQL and its checks. A check's name is
+  * `<kind>_<label>_<col>`. [[report]] and [[reportSql]] both fold it,
+  * so a check cannot exist on one side only.
+  *
   * Each check family maps to a DataFrame pattern (SURVEY §2):
   *  - `not_null`           → conditional-sum over one scan
   *  - `unique` (A9)        → groupBy(key).count.filter(count > 1)
   *  - `relationships` (J5) → conditional-sum of `fk IS NOT NULL AND NOT
-  *    resolves`, `resolves` an existence join fact→dim (broadcast)
+  *    resolves`, `resolves` an existence join to the target model
   *  - `accepted_values` (A10) → conditional-sum (non-null, out-of-domain)
   *
   * The report is one row per check with its violation count — asserted
   * all-zero in ScalaTest, and exposed as an oracle-verified query
   * (violation *counts* are deterministic; violating *rows* may not be).
   *
-  * Scale: all same-table checks share ONE scan via conditional
-  * aggregation. Silver's 8 checks are one pass; the fact's 13 checks
-  * ([[factChecks]]) are one pass over the materialized fact (parquet
-  * prunes it to the 8 columns they touch), its 4 relationships broadcast
-  * existence joins inside that pass — the fact is read once, with no
-  * fact-sized shuffle.
+  * `dbt test` runs against the models' tables: the report reads each
+  * model through [[PipelineRunner.table]], the table a run published or
+  * else a scratch build, never a re-derived plan. Per model, every
+  * not_null, accepted_values and relationships check is one conditional
+  * sum in ONE scan (parquet prunes the fact to the 8 columns its 13
+  * checks touch; its 4 relationships are existence joins inside that
+  * pass, so the fact is read once, with no fact-sized shuffle), and each
+  * unique check is one grouped query.
   */
 object Quality {
+
+  /** A dbt schema test on one column of a model. */
+  sealed trait Check {
+    def col: String
+    /** The dbt test name, the first part of the check's name. */
+    def kind: String
+  }
+  case class NotNull(col: String) extends Check { def kind = "not_null" }
+  case class Unique(col: String) extends Check { def kind = "unique" }
+  case class AcceptedValues(col: String, values: Seq[String]) extends Check {
+    def kind = "accepted_values"
+  }
+  /** dbt `relationships`: every non-NULL `col` is some `toKey` of
+    * `toModel` (the test filters `where <col> is not null`, so a NULL
+    * FK is the not_null test's violation). */
+  case class Relationship(col: String, toModel: String, toKey: String) extends Check {
+    def kind = "relationships"
+  }
+
+  /** One model's schema.yml block: its checks, named by `label`, and the
+    * model's oracle SQL, the body the SQL form checks. */
+  case class ModelChecks(model: String, label: String, sql: String, checks: Seq[Check]) {
+    def name(c: Check): String = s"${c.kind}_${label}_${c.col}"
+  }
+
+  private val serviceTypes = Seq("yellow", "green")
+
+  /** The reference's 32 tests (models/silver/schema.yml,
+    * models/gold/schema.yml), one block per model. */
+  val catalogue: Seq[ModelChecks] = Seq(
+    ModelChecks("stg_trips_unified", "silver", Silver.silverUnionSql,
+      Seq("service_type", "order_key", "line_number", "quantity",
+        "extended_price", "tax", "ship_ts").map(NotNull) :+
+        AcceptedValues("service_type", serviceTypes)),
+    ModelChecks("fct_trips", "fct", GoldFact.fctTripsSql,
+      Seq("trip_id", "service_type", "pickup_date_sk", "dropoff_date_sk",
+        "pickup_zone_sk", "dropoff_zone_sk", "quantity", "extended_price").map(NotNull) ++
+        Seq(AcceptedValues("service_type", serviceTypes),
+          // the reference's same-dim-twice shape
+          Relationship("pickup_date_sk", "dim_date", "date_sk"),
+          Relationship("dropoff_date_sk", "dim_date", "date_sk"),
+          Relationship("pickup_zone_sk", "dim_zone", "zone_sk"),
+          Relationship("dropoff_zone_sk", "dim_zone", "zone_sk"))),
+    ModelChecks("dim_date", "dim_date", GoldDims.dimDateSql, Seq(
+      NotNull("date_sk"), NotNull("date_actual"), Unique("date_sk"), Unique("date_actual"))),
+    ModelChecks("dim_zone", "dim_zone", GoldDims.dimZoneSql, Seq(
+      NotNull("zone_sk"), NotNull("locationid"), Unique("zone_sk"))),
+    ModelChecks("dim_payment_type", "dim_payment_type", GoldDims.dimPaymentTypeSql, Seq(
+      NotNull("status_code"), Unique("status_code"))),
+    ModelChecks("dim_rate_code", "dim_rate_code", GoldDims.dimRateCodeSql, Seq(
+      NotNull("priority_code"), Unique("priority_code"))))
 
   /** `dbt test` CLI analog: print the report, exit non-zero if any
     * check has violations (README.md:119-123 — "32 PASS" run shape).
@@ -77,94 +136,42 @@ object Quality {
         ") as (check_name, violations)")
   }
 
-  /** The fact's 13 checks — 8 not_null, 1 accepted_values and the 4
-    * relationships — in ONE pass over `fact`. Each FK projects a
-    * boolean "resolves" column, an existence join against its dim key
-    * (never a left join: a duplicated dim key cannot multiply fact
-    * rows), counted as `fk IS NOT NULL AND NOT resolves`. A NULL FK is
-    * the not_null test's violation, not a relationships one: dbt's
-    * `relationships` test filters `where <fk> is not null`. */
-  private[graft] def factChecks(fact: DataFrame, dimDate: DataFrame,
-      dimZone: DataFrame): DataFrame = {
-    // relationships ×4 (J5): both date SKs resolve in dim_date, both
-    // zone SKs in dim_zone — the reference's exact same-dim-twice shape
-    val fks = Seq(
-      ("pickup_date_sk", dimDate, "date_sk"),
-      ("dropoff_date_sk", dimDate, "date_sk"),
-      ("pickup_zone_sk", dimZone, "zone_sk"),
-      ("dropoff_zone_sk", dimZone, "zone_sk"))
-    val nnCols = Seq("trip_id", "service_type", "pickup_date_sk",
-      "dropoff_date_sk", "pickup_zone_sk", "dropoff_zone_sk",
-      "quantity", "extended_price")
-    val resolved = fks.foldLeft(fact) {
-      case (df, (fk, dim, key)) => df.withColumn(s"${fk}_resolves",
-        dim.select(col(key)).where(col(key) === col(fk).outer()).exists())
+  /** dbt `unique`: the number of `key` values carried by more than one row. */
+  private def uniqueCheck(df: DataFrame, key: String, name: String): DataFrame =
+    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
+      .filter(col("n") > 1)
+      .agg(count(lit(1)).as("violations"))
+      .select(lit(name).as("check_name"), col("violations"))
+
+  /** One model's checks, (check_name, violations) rows, over the frames
+    * `table` names: the model's own, and for a relationship its target.
+    * The not_null, accepted_values and relationships checks share ONE
+    * pass over the model; each relationship projects a boolean
+    * "resolves" column, an existence join against the target key (never
+    * a left join: a duplicated target key cannot multiply rows). Each
+    * unique check is one grouped query. */
+  private[graft] def checks(m: ModelChecks, table: String => DataFrame): DataFrame = {
+    val t = table(m.model)
+    val resolved = m.checks.foldLeft(t) {
+      case (df, Relationship(fk, to, key)) => df.withColumn(s"${fk}_resolves",
+        table(to).select(col(key)).where(col(key) === col(fk).outer()).exists())
+      case (df, _) => df
     }
-    condChecks(resolved,
-      nnCols.map(c => s"not_null_fct_$c" -> col(c).isNull) ++
-        Seq("accepted_values_fct_service_type" ->
-          !col("service_type").isin("yellow", "green")) ++
-        fks.map { case (fk, _, _) =>
-          s"relationships_fct_$fk" -> (col(fk).isNotNull && !col(s"${fk}_resolves"))
-        })
+    val conds = m.checks.collect {
+      case c @ NotNull(k) => m.name(c) -> col(k).isNull
+      // NULLs are the not_null test's job: isin is null-safe that way
+      case c @ AcceptedValues(k, vs) => m.name(c) -> !col(k).isin(vs: _*)
+      case c @ Relationship(k, _, _) => m.name(c) -> (col(k).isNotNull && !col(s"${k}_resolves"))
+    }
+    m.checks.collect { case c @ Unique(k) => uniqueCheck(t, k, m.name(c)) }
+      .foldLeft(condChecks(resolved, conds))(_ unionByName _)
   }
 
-  /** One row per check: (check_name, violations) — 32 rows, sorted. */
+  /** One row per check: (check_name, violations) — 32 rows, sorted —
+    * over the models' tables ([[PipelineRunner.table]]). */
   def report(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-
-    def uniqueCheck(df: DataFrame, key: String, name: String): DataFrame =
-      df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-        .filter($"n" > 1)
-        .agg(coalesce(count(lit(1)), lit(0L)).as("violations"))
-        .select(lit(name).as("check_name"), $"violations")
-
-    // ---- silver staging: 7 not_null + 1 accepted_values, ONE pass ----
-    val silver = Silver.build(spark, sfDir)
-    val silverNnCols = Seq("service_type", "order_key", "line_number",
-      "quantity", "extended_price", "tax", "ship_ts")
-    val silverChecks = condChecks(silver,
-      silverNnCols.map(c => s"not_null_silver_$c" -> col(c).isNull) :+
-        // dbt accepted_values semantics: NULLs are not violations here
-        // (they are the not_null test's job); isin is null-safe that way
-        ("accepted_values_silver_service_type" ->
-          !$"service_type".isin("yellow", "green")))
-
-    val dimZone = GoldDims.dimZone(spark, sfDir)
-    val dimDate = GoldDims.dimDate(spark)
-    val dimPayment = GoldDims.dimPaymentType(spark)
-    val dimRate = GoldDims.dimRateCode(spark)
-
-    // the materialized fact (the fct_trips table a run published for
-    // this corpus, else a scratch build), exactly how dbt test runs
-    // against the model's table rather than re-deriving the join chain
-    val fact = factChecks(GoldStage.fact(spark, sfDir), dimDate, dimZone)
-
-    // ---- dims: not_null batched per dim (one tiny pass), unique ×5 ----
-    val dimNn =
-      condChecks(dimDate, Seq(
-        "not_null_dim_date_date_sk" -> $"date_sk".isNull,
-        "not_null_dim_date_date_actual" -> $"date_actual".isNull))
-        .unionByName(condChecks(dimZone, Seq(
-          "not_null_dim_zone_zone_sk" -> $"zone_sk".isNull,
-          "not_null_dim_zone_locationid" -> $"locationid".isNull)))
-        .unionByName(condChecks(dimPayment, Seq(
-          "not_null_dim_payment_type_status_code" -> $"status_code".isNull)))
-        .unionByName(condChecks(dimRate, Seq(
-          "not_null_dim_rate_code_priority_code" -> $"priority_code".isNull)))
-
-    val uniques =
-      uniqueCheck(dimDate, "date_sk", "unique_dim_date_date_sk")
-        .unionByName(uniqueCheck(dimDate, "date_actual", "unique_dim_date_date_actual"))
-        .unionByName(uniqueCheck(dimZone, "zone_sk", "unique_dim_zone_zone_sk"))
-        .unionByName(uniqueCheck(dimPayment, "status_code", "unique_dim_payment_type_status_code"))
-        .unionByName(uniqueCheck(dimRate, "priority_code", "unique_dim_rate_code_priority_code"))
-
-    silverChecks.select($"check_name", $"violations".cast("long"))
-      .unionByName(fact.select($"check_name", $"violations".cast("long")))
-      .unionByName(dimNn.select($"check_name", $"violations".cast("long")))
-      .unionByName(uniques)
-      .orderBy($"check_name")
+    val tables = catalogue.map(m => m.model -> PipelineRunner.table(spark, sfDir, m.model)).toMap
+    catalogue.map(checks(_, tables)).reduce(_ unionByName _).orderBy(col("check_name"))
   }
 
   // ---- oracle --------------------------------------------------------
@@ -174,61 +181,43 @@ object Quality {
   private def noOrder(sql: String): String =
     sql.replaceAll("(?s)\nORDER BY [^\n]*$", "")
 
-  private def nnSql(cte: String, table: String, c: String): String =
-    s"""SELECT 'not_null_${table}_$c' AS check_name,
+  private def cte(model: String): String = s"q_$model"
+
+  private def nnSql(cte: String, name: String, c: String): String =
+    s"""SELECT '$name' AS check_name,
        |       CAST(coalesce(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS violations
        |FROM $cte""".stripMargin
 
-  private def uqSql(cte: String, table: String, c: String): String =
-    s"""SELECT 'unique_${table}_$c', CAST(count(*) AS BIGINT)
+  private def uqSql(cte: String, name: String, c: String): String =
+    s"""SELECT '$name', CAST(count(*) AS BIGINT)
        |FROM (SELECT $c FROM $cte GROUP BY $c HAVING count(*) > 1)""".stripMargin
 
-  private def accSql(cte: String, table: String, c: String): String =
-    s"""SELECT 'accepted_values_${table}_$c',
-       |       CAST(coalesce(sum(CASE WHEN $c NOT IN ('yellow','green') THEN 1 ELSE 0 END), 0) AS BIGINT)
+  private def accSql(cte: String, name: String, c: String, values: Seq[String]): String = {
+    val in = values.map(v => s"'$v'").mkString(",")
+    s"""SELECT '$name',
+       |       CAST(coalesce(sum(CASE WHEN $c NOT IN ($in) THEN 1 ELSE 0 END), 0) AS BIGINT)
        |FROM $cte""".stripMargin
+  }
 
-  private def relSql(fk: String, dimCte: String, dimKey: String): String =
-    s"""SELECT 'relationships_fct_$fk', CAST(count(*) AS BIGINT)
-       |FROM q_fact WHERE $fk NOT IN (SELECT $dimKey FROM $dimCte)""".stripMargin
+  private def relSql(cte: String, name: String, fk: String, toCte: String, toKey: String): String =
+    s"""SELECT '$name', CAST(count(*) AS BIGINT)
+       |FROM $cte WHERE $fk NOT IN (SELECT $toKey FROM $toCte)""".stripMargin
 
-  /** The 32 checks in DuckDB SQL. The fact / silver / dim CTE bodies are
-    * the SAME strings the individual verified queries use (embedded via
-    * [[noOrder]]), so the check oracle can never drift from the model
-    * oracles. */
+  /** The 32 checks in DuckDB SQL, rendered from [[catalogue]]. Each
+    * model's CTE body is the SAME string its verified query uses
+    * (embedded via [[noOrder]]), so the check oracle can never drift
+    * from the model oracles. */
   val reportSql: String = {
-    val silverNn = Seq("service_type", "order_key", "line_number",
-      "quantity", "extended_price", "tax", "ship_ts")
-      .map(nnSql("q_silver", "silver", _))
-    val factNn = Seq("trip_id", "service_type", "pickup_date_sk",
-      "dropoff_date_sk", "pickup_zone_sk", "dropoff_zone_sk",
-      "quantity", "extended_price")
-      .map(nnSql("q_fact", "fct", _))
-    val checks: Seq[String] =
-      silverNn :+ accSql("q_silver", "silver", "service_type")
-    val all: Seq[String] = checks ++ factNn ++ Seq(
-      accSql("q_fact", "fct", "service_type"),
-      relSql("pickup_date_sk", "q_date", "date_sk"),
-      relSql("dropoff_date_sk", "q_date", "date_sk"),
-      relSql("pickup_zone_sk", "q_zone", "zone_sk"),
-      relSql("dropoff_zone_sk", "q_zone", "zone_sk"),
-      nnSql("q_date", "dim_date", "date_sk"),
-      nnSql("q_date", "dim_date", "date_actual"),
-      nnSql("q_zone", "dim_zone", "zone_sk"),
-      nnSql("q_zone", "dim_zone", "locationid"),
-      nnSql("q_payment", "dim_payment_type", "status_code"),
-      nnSql("q_rate", "dim_rate_code", "priority_code"),
-      uqSql("q_date", "dim_date", "date_sk"),
-      uqSql("q_date", "dim_date", "date_actual"),
-      uqSql("q_zone", "dim_zone", "zone_sk"),
-      uqSql("q_payment", "dim_payment_type", "status_code"),
-      uqSql("q_rate", "dim_rate_code", "priority_code"))
-    s"""WITH q_silver AS (${noOrder(Silver.silverUnionSql)}),
-       |q_fact AS (${noOrder(GoldFact.fctTripsSql)}),
-       |q_date AS (${noOrder(GoldDims.dimDateSql)}),
-       |q_zone AS (${noOrder(GoldDims.dimZoneSql)}),
-       |q_payment AS (${noOrder(GoldDims.dimPaymentTypeSql)}),
-       |q_rate AS (${noOrder(GoldDims.dimRateCodeSql)})
+    val all = catalogue.flatMap { m =>
+      val q = cte(m.model)
+      m.checks.map {
+        case c @ NotNull(k) => nnSql(q, m.name(c), k)
+        case c @ Unique(k) => uqSql(q, m.name(c), k)
+        case c @ AcceptedValues(k, vs) => accSql(q, m.name(c), k, vs)
+        case c @ Relationship(k, to, key) => relSql(q, m.name(c), k, cte(to), key)
+      }
+    }
+    s"""WITH ${catalogue.map(m => s"${cte(m.model)} AS (${noOrder(m.sql)})").mkString(",\n")}
        |SELECT check_name, violations FROM (
        |${all.mkString("\nUNION ALL\n")})
        |ORDER BY check_name""".stripMargin

@@ -33,10 +33,9 @@ object WindowAudit {
     *
     * The counts encode the CURRENT optimizer's Window collapse/fold
     * behavior (e.g. q_tpch_q15's `partitionBy(lit(1))` folds to an
-    * empty partition spec; q_quality_report's 6 arrive by dim
-    * composition). A Spark upgrade that merges or splits Window nodes
-    * flips the exact-equality checks red with a message naming the
-    * QUERY — the fix then is to re-enumerate the catalogue
+    * empty partition spec). A Spark upgrade that merges or splits
+    * Window nodes flips the exact-equality checks red with a message
+    * naming the QUERY — the fix then is to re-enumerate the catalogue
     * (`SPARK_GRAFT_WINDOW_AUDIT=warn` run, read the stderr counts),
     * not to hunt for a query regression. */
   val Sanctioned: Map[String, Int] = Map(
@@ -44,9 +43,6 @@ object WindowAudit {
     "q_dim_date" -> 1,
     // zone dim SK — catalog-sized (GoldDims.scala:103)
     "q_dim_zone" -> 1,
-    // warehouse-wide dbt checks read BOTH dims (their SK windows
-    // arrive by composition: 2× date spine + zone + downstream reuse)
-    "q_quality_report" -> 6,
     // trailing z-score over the one-row-per-day aggregate (mean + std
     // frames — TimeSeries.scala:28)
     "q_ts_anomaly" -> 2,

@@ -10,8 +10,8 @@ import graft.functions.Exact
   * bit for bit, at 1 and at 13 partitions, grouped and global; the
   * decimal sum is the sum of the per-row casts (HALF_UP at the 6th
   * digit); a value past the type's 21 integer digits fails on both
-  * sides, and NaN and +-Inf, which Spark's cast makes NULL even under
-  * ANSI, drop out on both sides. The data covers both of `sumExact`'s
+  * sides, and NaN and +-Inf fail the DataFrame form, as the oracle's
+  * cast fails on them. The data covers both of `sumExact`'s
   * paths (the long fast path and the cast fallback) and their edges. */
 class ExactSpec extends SparkSuite {
 
@@ -73,11 +73,9 @@ class ExactSpec extends SparkSuite {
   private def bits(r: Row, i: Int): Option[Long] =
     if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
 
-  /** Per-row casts summed on the driver: what the decimal sum must be
-    * (the cast of NaN or +-Inf is NULL). */
+  /** Per-row casts summed on the driver: what the decimal sum must be. */
   private def reference(vs: Seq[Option[Double]]): Option[BigDecimal] =
-    vs.flatten.filterNot(v => v.isNaN || v.isInfinite)
-      .map(v => BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP))
+    vs.flatten.map(v => BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP))
       .reduceOption(_ + _)
 
   /** Both forms over `data`, grouped by `g` or global, per partition count. */
@@ -153,12 +151,18 @@ class ExactSpec extends SparkSuite {
     }
   }
 
-  test("NaN and +-Inf drop out of the sum on both sides, and count in the average") {
-    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
-    val data = (nonFinite ++ Seq(1.5, -2.25, 0.1)).map(v => (1, Some(v))) ++
-      nonFinite.map(v => (2, Some(v))) ++ nonFinite.take(1).map(v => (3, Some(v)))
-    agree(data, grouped = true)
-    agree(data, grouped = false)
+  test("NaN and +-Inf fail the DataFrame form, as the oracle's cast does") {
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { v =>
+      val data = Seq((1, Some(v)), (1, Some(1.5)), (2, Some(0.1)), (2, None))
+      Seq(true, false).foreach { grouped =>
+        forms(data, grouped).foreach { case (parts, api, _) =>
+          val e = intercept[Exception](api.collect())
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => String.valueOf(t.getMessage).contains(Exact.NonFinite)),
+            s"$v at $parts partitions, grouped=$grouped: $e")
+        }
+      }
+    }
   }
 
   test("the fast path is the common path on the reference measures") {

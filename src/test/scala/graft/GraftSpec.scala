@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
@@ -186,10 +186,29 @@ class PipelineSpec extends SparkSuite {
     assert(fam("unique_") == 5)
     assert(fam("relationships_") == 4)
     assert(fam("accepted_values_") == 2)
+    // the names, one per schema.yml test (the inventory in Quality's header)
+    assert(rows.map(_.getString(0)).toSeq == Seq(
+      "accepted_values_fct_service_type", "accepted_values_silver_service_type",
+      "not_null_dim_date_date_actual", "not_null_dim_date_date_sk",
+      "not_null_dim_payment_type_status_code", "not_null_dim_rate_code_priority_code",
+      "not_null_dim_zone_locationid", "not_null_dim_zone_zone_sk",
+      "not_null_fct_dropoff_date_sk", "not_null_fct_dropoff_zone_sk",
+      "not_null_fct_extended_price", "not_null_fct_pickup_date_sk",
+      "not_null_fct_pickup_zone_sk", "not_null_fct_quantity",
+      "not_null_fct_service_type", "not_null_fct_trip_id",
+      "not_null_silver_extended_price", "not_null_silver_line_number",
+      "not_null_silver_order_key", "not_null_silver_quantity",
+      "not_null_silver_service_type", "not_null_silver_ship_ts", "not_null_silver_tax",
+      "relationships_fct_dropoff_date_sk", "relationships_fct_dropoff_zone_sk",
+      "relationships_fct_pickup_date_sk", "relationships_fct_pickup_zone_sk",
+      "unique_dim_date_date_actual", "unique_dim_date_date_sk",
+      "unique_dim_payment_type_status_code", "unique_dim_rate_code_priority_code",
+      "unique_dim_zone_zone_sk").sorted)
   }
 }
 
-class PipelineRunnerSpec extends SparkSuite {
+class PipelineRunnerSpec extends SparkSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
   import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   import graft.functions.Staged
@@ -268,14 +287,58 @@ class PipelineRunnerSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_test").toString
     try withSfCopy { dir =>
       PipelineRunner.run(spark, dir, out)
-      val table = s"$out/fct_trips"
-      val fct = spark.read.parquet(table)
-      val victim = fct.agg(min("trip_id")).head.getString(0)
-      graft.sources.Ingest.writeAudited(fct.withColumn("trip_id",
-        when(col("trip_id") === victim, lit(null)).otherwise(col("trip_id"))), table)(_.count())
+      /** Replace the published table `model` with `edit` of its rows. */
+      def rewrite(model: String)(edit: DataFrame => DataFrame): Unit = {
+        val table = s"$out/$model"
+        graft.sources.Ingest.writeAudited(edit(spark.read.parquet(table)), table)(_.count()); ()
+      }
+      /** `c` set NULL on the first row by `keys`, a unique key. */
+      def nullOne(c: String, keys: String*)(df: DataFrame): DataFrame = {
+        val v = df.select(keys.map(col): _*).orderBy(keys.map(col): _*).head()
+        val hit = keys.zipWithIndex.map { case (k, i) => col(k) === lit(v.get(i)) }.reduce(_ && _)
+        df.withColumn(c, when(hit, lit(null)).otherwise(col(c)))
+      }
+      rewrite("fct_trips")(nullOne("trip_id", "trip_id"))
+      rewrite("stg_trips_unified")(nullOne("order_key", "order_key", "line_number"))
+      rewrite("dim_zone")(z => z.unionByName(z.limit(1)))
       val report = Quality.report(spark, dir).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(report("not_null_fct_trip_id") == 1L, report)
+      assert(report("not_null_silver_order_key") == 1L, report)
+      assert(report("unique_dim_zone_zone_sk") == 1L, report)
+      assert(report.count(_._2 != 0L) == 3, report)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("after a run, dbt test scans only the tables the run wrote") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_scans").toString
+    try withSfCopy { dir =>
+      PipelineRunner.run(spark, dir, out)
+      val report = Quality.report(spark, dir)
+      assert(report.collect().forall(_.getLong(1) == 0L))
+      val root = new java.io.File(out).getAbsolutePath
+      val scans = collectWithSubqueries(report.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location.rootPaths.map(_.toUri.getPath)
+      }.flatten
+      assert(scans.nonEmpty)
+      assert(scans.forall(_.startsWith(root + "/")), scans.mkString(", "))
+      assert(scans.map(p => new java.io.File(p).getName).toSet ==
+        PipelineRunner.models.map(_.name).toSet, scans.mkString(", "))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("republishing after an input rewrite replaces each model's stage entry") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_republish").toString
+    try withSfCopy { dir =>
+      val before = Staged.buildTimes.keySet
+      PipelineRunner.run(spark, dir, out)
+      halveLineitem(dir)
+      PipelineRunner.run(spark, dir, out)
+      val added = Staged.buildTimes.keySet -- before
+      assert(added.size == PipelineRunner.models.size, added.mkString(", "))
+      val key = Staged.sfKey(dir)
+      assert(added == PipelineRunner.models.map(m => s"${m.name}_$key").toSet, added.mkString(", "))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
@@ -283,7 +346,7 @@ class PipelineRunnerSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_stale").toString
     try withSfCopy { a => withSfCopy { b =>
       halveLineitem(b) // corpus b: a strict subset of a's trips
-      val standaloneA = GoldStage.rows(spark, a).count()
+      val standaloneA = GoldFact.build(spark, a).count()
       assert(PipelineRunner.run(spark, a, out)("fct_trips") == standaloneA)
       // b's fact replaces a's table: a is no longer served from it
       val countB = PipelineRunner.run(spark, b, out)("fct_trips")
@@ -302,8 +365,8 @@ class PipelineRunnerSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_fail").toString
     try {
       val ms = Seq(
-        PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom"), None),
-        PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }, None))
+        PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom")),
+        PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }))
       val e = intercept[RuntimeException](PipelineRunner.runModels(spark, sf, out, ms))
       assert(e.getMessage == "boom: boom" && e.getCause.getMessage == "boom")
       assert(new java.io.File(s"$out/slow/_SUCCESS").exists(),
@@ -314,11 +377,11 @@ class PipelineRunnerSpec extends SparkSuite {
   test("a model that fails mid-write leaves its last good table readable") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_keep").toString
     try {
-      val good = PipelineRunner.Model("trips", Nil, (s, _) => s.range(10).toDF(), None)
+      val good = PipelineRunner.Model("trips", Nil, (s, _) => s.range(10).toDF())
       assert(PipelineRunner.runModels(spark, sf, out, Seq(good)) == Map("trips" -> 10L))
       // the rerun's write fails inside a task, after the write has begun
       val bad = PipelineRunner.Model("trips", Nil, (s, _) =>
-        s.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id"), None)
+        s.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id"))
       val e = intercept[Exception](PipelineRunner.runModels(spark, sf, out, Seq(bad)))
       assert(e.getMessage.startsWith("trips: "), e.getMessage)
       assert(e.getMessage.contains("mid-write"), e.getMessage)
@@ -332,7 +395,7 @@ class PipelineRunnerSpec extends SparkSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_cancel").toString
     try assertInterruptCancels("sleepy") {
       PipelineRunner.runModels(spark, sf, out,
-        Seq(PipelineRunner.Model("sleepy", Nil, (s, _) => sleepyFrame(s), None)))
+        Seq(PipelineRunner.Model("sleepy", Nil, (s, _) => sleepyFrame(s))))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 

@@ -204,7 +204,7 @@ class PlanSpec extends SparkSuite {
 
   test("fact build: every dim join is a broadcast join (no fact shuffle per dim)") {
     // assert on the BUILDER: the query surface reads the materialized
-    // fact (GoldStage), whose plan is just a parquet scan
+    // fact (PipelineRunner.table), whose plan is just a parquet scan
     val plan = planOf(GoldFact.build(spark, sf).limit(1))
     val bhj = plan.split("BroadcastHashJoin").length - 1
     assert(bhj >= 4, s"expected >=4 broadcast dim joins, got $bhj\n${plan.take(800)}")

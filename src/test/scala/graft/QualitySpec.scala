@@ -22,8 +22,10 @@ class QualitySpec extends SparkSuite with AdaptiveSparkPlanHelper {
         "pickup_zone_sk", "dropoff_zone_sk", "quantity", "extended_price")
   }
 
+  /** The fact's catalogue block over the hand-built frames. */
   private def counts(dimDate: DataFrame, dimZone: DataFrame): Map[String, Long] =
-    Quality.factChecks(fact, dimDate, dimZone).collect()
+    Quality.checks(Quality.catalogue.find(_.model == "fct_trips").get,
+      Map("fct_trips" -> fact, "dim_date" -> dimDate, "dim_zone" -> dimZone)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   private def dims: (DataFrame, DataFrame) = {
