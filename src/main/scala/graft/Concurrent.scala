@@ -11,11 +11,11 @@ import org.apache.spark.sql.SparkSession
   * the call's job tag, interruptible on cancel. The call waits for every
   * task (a fail-fast wait would leave siblings writing after the caller
   * moved on), then rethrows the first failure in task order as
-  * `"<task>: <message>"`. A failure cancels no sibling: an `Overwrite`
-  * write deletes the old table first, so a cancelled writer would leave
-  * it missing. The wait is bounded by [[Timeout]]: on timeout, or if the
-  * caller is interrupted, the call's jobs are cancelled and it throws,
-  * naming the tasks that had not settled. */
+  * `"<task>: <message>"`. A failure cancels no sibling: every task runs
+  * to its end, whatever the others do. The wait is bounded by
+  * [[Timeout]]: on timeout, or if the caller is interrupted, the call's
+  * jobs are cancelled and it throws, naming the tasks that had not
+  * settled. */
 object Concurrent {
 
   val Timeout: FiniteDuration = 10.minutes

@@ -23,6 +23,7 @@ object SparkEntry {
     "q_hourly_matrix" -> (Analytics.hourlyMatrix _),
     "q_speed_band" -> (Analytics.speedBand _),
     "q_coverage_matrix" -> (Analytics.coverageMatrix _),
+    // builders, not model tables: a table read hides the dim windows from WindowAudit
     "q_silver_union" -> (Silver.silverUnion _),
     "q_dim_date" -> ((s: SparkSession, _: String) => GoldDims.dimDate(s)),
     "q_dim_zone" -> (GoldDims.dimZone _),

@@ -10,6 +10,7 @@ import graft.sources.Tables
   * the dims via LEFT broadcast equi-joins with expression join keys
   * (J1/J2: `DATE(ts) = date_actual`), unmatched keys defaulted to the
   * sentinel SK 0 via COALESCE (J3, paired with the dim's Unknown row).
+  * Silver and the four dims, its `ref()`s, are read as tables ([[build]]).
   *
   * Scale design:
   *  - silver ⨝ orders is the one genuinely large join (fact-to-fact at
@@ -45,22 +46,23 @@ object GoldFact {
       date_format(pickup, "yyyy-MM-dd HH:mm:ss"),
       date_format(dropoff, "yyyy-MM-dd HH:mm:ss")))
 
-  /** The fact's join chain, deriving silver inline: every metric and
-    * surrogate key plus the join intermediates. The model itself is
-    * this projected to [[verifiedColumns]] ([[PipelineRunner.models]]);
-    * specs assert plan shape on this builder. */
+  /** The fact's rows, [[verifiedColumns]]: the join chain over its five
+    * `ref()`s, read through [[PipelineRunner.table]] (so no dim window
+    * reaches this plan), and the corpus's orders, customer and supplier.
+    * Specs assert plan shape on this builder. */
   def build(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val silver = Silver.build(spark, sfDir)
+    def ref(model: String) = PipelineRunner.table(spark, sfDir, model)
+    val silver = ref("stg_trips_unified")
     val orders = Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate".as("pickup_ts"),
         $"o_orderstatus", $"o_orderpriority")
     val cust = Tables.customer(spark, sfDir).select($"c_custkey", $"c_nationkey")
     val supp = Tables.supplier(spark, sfDir).select($"s_suppkey", $"s_nationkey")
-    val dimDate = GoldDims.dimDate(spark)
-    val dimZone = GoldDims.dimZone(spark, sfDir)
-    val dimStatus = GoldDims.dimPaymentType(spark)
-    val dimPrio = GoldDims.dimRateCode(spark)
+    val dimDate = ref("dim_date")
+    val dimZone = ref("dim_zone")
+    val dimStatus = ref("dim_payment_type")
+    val dimPrio = ref("dim_rate_code")
 
     val enriched = silver
       .join(orders, $"order_key" === $"o_orderkey")
@@ -135,11 +137,12 @@ object GoldFact {
           lit("1995-01-01").cast("timestamp"), lit("2001-12-31").cast("timestamp")) &&
         $"dropoff_ts".between(
           lit("1995-01-01").cast("timestamp"), lit("2001-12-31").cast("timestamp")))
+      .select(verifiedColumns.map(col): _*)
   }
 
-  /** The fact's deterministic public column set — what the verified
-    * query emits and what the `fct_trips` model writes besides its
-    * audit column (build intermediates like raw join keys stay out).
+  /** The fact's deterministic public column set — what [[build]]
+    * returns, the verified query emits and the `fct_trips` model writes
+    * besides its audit column (raw join keys stay out).
     * Includes every column the quality suite's 13 fct checks read. */
   val verifiedColumns: Seq[String] = Seq(
     "trip_id", "service_type", "order_key", "line_number",

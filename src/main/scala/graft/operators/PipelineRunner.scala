@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.broadcast
 import graft.functions.Staged
 
 /** The `dbt run` analog — the reference's main entry point (SURVEY §3
@@ -29,9 +29,9 @@ import graft.functions.Staged
   * ([[Quality.report]]) and the query surface read the tables `dbt run`
   * wrote, through [[table]]. With no run before them (the `dbt test`
   * CLI, the oracle-gated queries) [[table]] builds the model into
-  * scratch once. `fct_trips` still builds from the sources; its deps
-  * are lineage (the `ref()` edges): they order the run and close
-  * `--select` subsets.
+  * scratch once. A model's deps are its `ref()`s: they order the run,
+  * close `--select` subsets and, for `fct_trips`, name the tables
+  * [[GoldFact.build]] reads, the ones wave 1 just published.
   */
 object PipelineRunner {
 
@@ -40,9 +40,8 @@ object PipelineRunner {
       build: (SparkSession, String) => DataFrame)
 
   /** The reference's six models, each built from the corpus dir. The
-    * fact is [[GoldFact.build]] projected to [[GoldFact.verifiedColumns]]
-    * (the raw build also carries every join intermediate) plus its
-    * audit column. */
+    * fact is [[GoldFact.build]], which reads its deps through [[table]],
+    * plus its audit column. */
   def models: Seq[Model] = Seq(
     Model("stg_trips_unified", Nil, Silver.build),
     Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s)),
@@ -51,7 +50,7 @@ object PipelineRunner {
     Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s)),
     Model("fct_trips",
       Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
-      (s, sf) => loadedAt(GoldFact.build(s, sf).select(GoldFact.verifiedColumns.map(col): _*))))
+      (s, sf) => loadedAt(GoldFact.build(s, sf))))
 
   /** Model `name`'s table for the corpus at `sfDir`: the table a run
     * published for this corpus state, or else a scratch build, read as

@@ -328,6 +328,25 @@ class PipelineRunnerSpec extends SparkSuite
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("after a run, the fact reads the tables its deps name") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_refs").toString
+    try withSfCopy { dir =>
+      PipelineRunner.run(spark, dir, out)
+      val fact = GoldFact.build(spark, dir)
+      fact.collect()
+      val scans = collectWithSubqueries(fact.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location.rootPaths.map(_.toUri.getPath)
+      }.flatten
+      val root = new java.io.File(out).getAbsolutePath + "/"
+      val (models, corpus) = scans.partition(_.startsWith(root))
+      val deps = PipelineRunner.models.find(_.name == "fct_trips").get.deps
+      assert(models.map(_.stripPrefix(root)).toSet == deps.toSet, scans.mkString(", "))
+      assert(corpus.map(p => new java.io.File(p).getName).toSet ==
+        Set("orders.parquet", "customer.parquet", "supplier.parquet"), scans.mkString(", "))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("republishing after an input rewrite replaces each model's stage entry") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_republish").toString
     try withSfCopy { dir =>

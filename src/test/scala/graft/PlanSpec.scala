@@ -208,6 +208,10 @@ class PlanSpec extends SparkSuite {
     val plan = planOf(GoldFact.build(spark, sf).limit(1))
     val bhj = plan.split("BroadcastHashJoin").length - 1
     assert(bhj >= 4, s"expected >=4 broadcast dim joins, got $bhj\n${plan.take(800)}")
+    // the dims are read as tables: their SK windows never reach the fact
+    val windows = graft.plans.WindowAudit.globalWindows(
+      GoldFact.build(spark, sf).queryExecution.optimizedPlan)
+    assert(windows == 0, s"$windows global windows in the fact plan")
   }
 
   test("weighted sample: TakeOrderedAndProject, no global sort of the corpus") {
