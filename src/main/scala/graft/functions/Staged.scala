@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Compute-once-per-JVM materialized artifacts: the generic machinery
   * behind [[DedupStage]] and the dbt models
@@ -30,9 +31,12 @@ object Staged {
     * overlap that lets independent stage builds (the two quality-model
     * fits, the band index next to the cluster chain) back-fill an
     * otherwise idle box. The old single `staged.synchronized` held the
-    * global lock for the whole build, serializing every artifact. */
-  private final class Cell(val dir: String)(build: () => Unit) {
-    lazy val path: String = { build(); dir } // lazy-val init = per-cell monitor
+    * global lock for the whole build, serializing every artifact.
+    * `build` returns the schema the artifact was written with (empty for
+    * a directory artifact), so a read needs no footer-inference job. */
+  private final class Cell(val dir: String)(build: () => StructType) {
+    lazy val schema: StructType = build() // lazy-val init = per-cell monitor
+    def path: String = { schema; dir }
   }
   private val staged =
     new java.util.concurrent.ConcurrentHashMap[String, Cell]()
@@ -104,16 +108,20 @@ object Staged {
     * build (the old remove-on-failure semantic, preserved by lazy-val
     * initialization rules). A key some run [[publish]]ed reads that
     * table; if the table has been deleted since, the key is built into
-    * scratch instead. */
+    * scratch instead. Either is read with the schema it was written with. */
   def materialize(key: String, spark: SparkSession)
       (build: => DataFrame): DataFrame = {
     val cell = staged.computeIfAbsent(key, _ => {
       val p = s"$stageRoot/$key"
-      new Cell(p)(() => timed(key)(build.write.mode("overwrite").parquet(p)))
+      new Cell(p)(() => timed(key) {
+        val df = build
+        df.write.mode("overwrite").parquet(p)
+        df.schema
+      })
     })
     val p = new org.apache.hadoop.fs.Path(cell.path)
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(cell.path)
+      spark.read.schema(cell.schema).parquet(cell.dir)
     else {
       staged.remove(key, cell)
       materialize(key, spark)(build)
@@ -137,7 +145,7 @@ object Staged {
       if (cell.dir == table && staged.remove(k, cell)) buildSecs.synchronized { buildSecs -= k }
     }
     val result = timed(key)(graft.sources.Ingest.writeAudited(df, dir)(audit))
-    staged.put(key, new Cell(table)(() => ()))
+    staged.put(key, new Cell(table)(() => df.schema))
     result
   }
 
@@ -161,6 +169,7 @@ object Staged {
         // the frame twin above is overwrite-mode and needs no sweep)
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
         timed(s"dir_$key")(build(p))
+        new StructType()
       })
     }).path
   }

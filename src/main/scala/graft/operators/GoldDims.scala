@@ -56,7 +56,7 @@ object GoldDims {
         "is_weekend", "fiscal_quarter")
   }
 
-  val dimDateSql: String =
+  private[operators] val dimDateBody: String =
     """SELECT CAST(row_number() OVER (ORDER BY date_actual) AS INTEGER) AS date_sk,
       |       date_actual,
       |       CAST(year(date_actual) AS INTEGER) AS year,
@@ -71,8 +71,9 @@ object GoldDims {
       |       isodow(date_actual) >= 6 AS is_weekend,
       |       'Q' || CAST(quarter(date_actual) AS VARCHAR) AS fiscal_quarter
       |FROM (SELECT CAST(generate_series AS DATE) AS date_actual
-      |      FROM generate_series(DATE '1995-01-01', DATE '2001-12-31', INTERVAL 1 DAY))
-      |ORDER BY date_sk""".stripMargin
+      |      FROM generate_series(DATE '1995-01-01', DATE '2001-12-31', INTERVAL 1 DAY))""".stripMargin
+
+  val dimDateSql: String = dimDateBody + "\nORDER BY date_sk"
 
   /** W2/F10/F16/U2: zone dimension from nation ⨝ region — string
     * cleaning (trim/replace/upper/LIKE), CASE decodes, row_number SK,
@@ -111,7 +112,7 @@ object GoldDims {
       .orderBy($"zone_sk")
   }
 
-  val dimZoneSql: String =
+  private[operators] val dimZoneBody: String =
     """WITH zones AS (
       |  SELECT CAST(row_number() OVER (ORDER BY n_nationkey) AS INTEGER) AS zone_sk,
       |         n_nationkey AS locationid,
@@ -126,8 +127,9 @@ object GoldDims {
       |  FROM nation JOIN region ON n_regionkey = r_regionkey)
       |SELECT * FROM zones
       |UNION ALL
-      |SELECT 0, -1, 'Unknown', 'Unknown', 'Unknown', false
-      |ORDER BY zone_sk""".stripMargin
+      |SELECT 0, -1, 'Unknown', 'Unknown', 'Unknown', false""".stripMargin
+
+  val dimZoneSql: String = dimZoneBody + "\nORDER BY zone_sk"
 
   /** G2: VALUES inline dim — order-status decode
     * (dim_payment_type.sql:29-32 analog: 7 literal rows). */
@@ -142,14 +144,15 @@ object GoldDims {
       .orderBy($"status_code")
   }
 
-  val dimPaymentTypeSql: String =
+  private[operators] val dimPaymentTypeBody: String =
     """SELECT * FROM (VALUES
       |  ('O', 'Open', true, false),
       |  ('F', 'Fulfilled', true, false),
       |  ('P', 'Pending', true, true),
       |  ('-', 'Unknown', false, false))
-      |  t(status_code, status_desc, is_valid, needs_review)
-      |ORDER BY status_code""".stripMargin
+      |  t(status_code, status_desc, is_valid, needs_review)""".stripMargin
+
+  val dimPaymentTypeSql: String = dimPaymentTypeBody + "\nORDER BY status_code"
 
   /** G2: VALUES inline dim — order-priority decode
     * (dim_rate_code.sql:12-21 analog). */
@@ -166,7 +169,7 @@ object GoldDims {
       .orderBy($"priority_code")
   }
 
-  val dimRateCodeSql: String =
+  private[operators] val dimRateCodeBody: String =
     """SELECT * FROM (VALUES
       |  ('1-URGENT', 'Urgent priority', true, false),
       |  ('2-HIGH', 'High priority', true, false),
@@ -174,6 +177,7 @@ object GoldDims {
       |  ('4-NOT SPECIFIED', 'Unspecified priority', false, true),
       |  ('5-LOW', 'Low priority', false, false),
       |  ('-1', 'Unknown', false, true))
-      |  t(priority_code, priority_desc, is_expedited, needs_review)
-      |ORDER BY priority_code""".stripMargin
+      |  t(priority_code, priority_desc, is_expedited, needs_review)""".stripMargin
+
+  val dimRateCodeSql: String = dimRateCodeBody + "\nORDER BY priority_code"
 }

@@ -10,7 +10,9 @@ import graft.sources.Tables
   * the dims via LEFT broadcast equi-joins with expression join keys
   * (J1/J2: `DATE(ts) = date_actual`), unmatched keys defaulted to the
   * sentinel SK 0 via COALESCE (J3, paired with the dim's Unknown row).
-  * Silver and the four dims, its `ref()`s, are read as tables ([[build]]).
+  * Silver and the four dims, its `ref()`s, are read as tables ([[build]]);
+  * the oracle body ([[fctTripsBody]]) reads them by model name, and
+  * [[fctTripsSql]] compiles their one SQL bodies in as CTEs.
   *
   * Scale design:
   *  - silver ⨝ orders is the one genuinely large join (fact-to-fact at
@@ -164,51 +166,10 @@ object GoldFact {
       .orderBy($"order_key", $"line_number")
   }
 
-  val fctTripsSql: String =
-    """WITH silver AS (
-      |  SELECT 'yellow' AS service_type, l_orderkey AS order_key,
-      |         l_linenumber AS line_number, l_suppkey AS supp_key,
-      |         l_quantity AS quantity,
-      |         l_extendedprice AS extended_price, l_tax AS tax,
-      |         l_shipdate AS dropoff_ts,
-      |         CAST(NULL AS DOUBLE) AS ehail_fee,
-      |         CAST(l_tax * 0.5 AS DOUBLE) AS airport_fee
-      |  FROM lineitem WHERE l_linestatus = 'O'
-      |    AND l_shipdate IS NOT NULL AND l_quantity >= 0
-      |    AND l_extendedprice >= 0 AND l_tax >= 0
-      |  UNION ALL
-      |  SELECT 'green', l_orderkey, l_linenumber, l_suppkey, l_quantity,
-      |         l_extendedprice, l_tax, l_shipdate,
-      |         CAST(l_tax * 0.5 AS DOUBLE), CAST(NULL AS DOUBLE)
-      |  FROM lineitem WHERE l_linestatus = 'F'
-      |    AND l_shipdate IS NOT NULL AND l_quantity >= 0
-      |    AND l_extendedprice >= 0 AND l_tax >= 0),
-      |dim_date AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY d) AS INTEGER) AS date_sk,
-      |         CAST(d AS DATE) AS date_actual
-      |  FROM (SELECT generate_series AS d
-      |        FROM generate_series(DATE '1995-01-01', DATE '2001-12-31', INTERVAL 1 DAY))),
-      |dim_zone AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY n_nationkey) AS INTEGER) AS zone_sk,
-      |         n_nationkey AS locationid
-      |  FROM nation),
-      |dim_status AS (
-      |  SELECT * FROM (VALUES ('O','Open'), ('F','Fulfilled'), ('P','Pending'))
-      |    t(status_code, status_desc)),
-      |dim_prio AS (
-      |  SELECT * FROM (VALUES ('1-URGENT','Urgent priority'), ('2-HIGH','High priority'),
-      |    ('3-MEDIUM','Medium priority'), ('4-NOT SPECIFIED','Unspecified priority'),
-      |    ('5-LOW','Low priority')) t(priority_code, priority_desc)),
-      |enriched AS (
-      |  SELECT s.*, o.o_orderdate AS pickup_ts, o.o_orderstatus,
-      |         o.o_orderpriority, c.c_nationkey, sup.s_nationkey,
-      |         (CAST(floor(epoch(s.dropoff_ts)) AS BIGINT)
-      |          - CAST(floor(epoch(o.o_orderdate)) AS BIGINT)) / 3600.0 AS trip_duration_hours
-      |  FROM silver s
-      |  JOIN orders o ON s.order_key = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier sup ON s.supp_key = sup.s_suppkey)
-      |SELECT md5(concat_ws('|', CAST(order_key AS VARCHAR),
+  /** The model's oracle body: one SELECT over its five `ref()`s, named
+    * as models, and the corpus's orders, customer and supplier. */
+  private[operators] val fctTripsBody: String =
+    """SELECT md5(concat_ws('|', CAST(order_key AS VARCHAR),
       |         CAST(line_number AS VARCHAR),
       |         strftime(pickup_ts, '%Y-%m-%d %H:%M:%S'),
       |         strftime(dropoff_ts, '%Y-%m-%d %H:%M:%S'))) AS trip_id,
@@ -232,14 +193,27 @@ object GoldFact {
       |       hour(pickup_ts) BETWEEN 6 AND 10 OR hour(pickup_ts) BETWEEN 16 AND 20 AS is_rush_hour,
       |       hour(pickup_ts) BETWEEN 22 AND 6 AS is_night_trip,
       |       quantity <= 0 OR extended_price <= 0 OR dropoff_ts <= pickup_ts AS has_data_quality_issue
-      |FROM enriched
+      |FROM (
+      |  SELECT s.service_type, s.order_key, s.line_number, s.quantity,
+      |         s.extended_price, s.tax, s.ehail_fee, s.airport_fee,
+      |         s.ship_ts AS dropoff_ts, o.o_orderdate AS pickup_ts, o.o_orderstatus,
+      |         o.o_orderpriority, c.c_nationkey, sup.s_nationkey,
+      |         (CAST(floor(epoch(s.ship_ts)) AS BIGINT)
+      |          - CAST(floor(epoch(o.o_orderdate)) AS BIGINT)) / 3600.0 AS trip_duration_hours
+      |  FROM stg_trips_unified s
+      |  JOIN orders o ON s.order_key = o.o_orderkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN supplier sup ON s.supp_key = sup.s_suppkey)
       |LEFT JOIN dim_date pd ON CAST(pickup_ts AS DATE) = pd.date_actual
       |LEFT JOIN dim_date dd ON CAST(dropoff_ts AS DATE) = dd.date_actual
       |LEFT JOIN dim_zone z ON c_nationkey = z.locationid
       |LEFT JOIN dim_zone dz ON s_nationkey = dz.locationid
-      |LEFT JOIN dim_status st ON o_orderstatus = st.status_code
-      |LEFT JOIN dim_prio pr ON o_orderpriority = pr.priority_code
+      |LEFT JOIN dim_payment_type st ON o_orderstatus = st.status_code
+      |LEFT JOIN dim_rate_code pr ON o_orderpriority = pr.priority_code
       |WHERE pickup_ts BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '2001-12-31'
-      |  AND dropoff_ts BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '2001-12-31'
-      |ORDER BY order_key, line_number""".stripMargin
+      |  AND dropoff_ts BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '2001-12-31'""".stripMargin
+
+  /** The verified query's oracle: the compiled model, total-ordered. */
+  val fctTripsSql: String = PipelineRunner.compile(Seq("fct_trips"),
+    "SELECT * FROM fct_trips\nORDER BY order_key, line_number")
 }

@@ -32,25 +32,40 @@ import graft.functions.Staged
   * scratch once. A model's deps are its `ref()`s: they order the run,
   * close `--select` subsets and, for `fct_trips`, name the tables
   * [[GoldFact.build]] reads, the ones wave 1 just published.
+  *
+  * The same deps compile each model's one oracle SQL body as dbt
+  * compiles `ref()`s ([[compile]]): each upstream model becomes a CTE
+  * named after it, in the fact's oracle and in the 32-check oracle.
   */
 object PipelineRunner {
 
-  /** A model: its name, its `ref()` deps and its rows for a corpus dir. */
-  case class Model(name: String, deps: Seq[String],
+  /** A model: its name, its `ref()` deps, its oracle SQL body (DuckDB,
+    * no `ORDER BY`; it reads its deps by model name) and its rows for a
+    * corpus dir. */
+  case class Model(name: String, deps: Seq[String], sql: String,
       build: (SparkSession, String) => DataFrame)
 
   /** The reference's six models, each built from the corpus dir. The
     * fact is [[GoldFact.build]], which reads its deps through [[table]],
     * plus its audit column. */
   def models: Seq[Model] = Seq(
-    Model("stg_trips_unified", Nil, Silver.build),
-    Model("dim_date", Nil, (s, _) => GoldDims.dimDate(s)),
-    Model("dim_zone", Nil, GoldDims.dimZone),
-    Model("dim_payment_type", Nil, (s, _) => GoldDims.dimPaymentType(s)),
-    Model("dim_rate_code", Nil, (s, _) => GoldDims.dimRateCode(s)),
+    Model("stg_trips_unified", Nil, Silver.silverBody, Silver.build),
+    Model("dim_date", Nil, GoldDims.dimDateBody, (s, _) => GoldDims.dimDate(s)),
+    Model("dim_zone", Nil, GoldDims.dimZoneBody, GoldDims.dimZone),
+    Model("dim_payment_type", Nil, GoldDims.dimPaymentTypeBody,
+      (s, _) => GoldDims.dimPaymentType(s)),
+    Model("dim_rate_code", Nil, GoldDims.dimRateCodeBody, (s, _) => GoldDims.dimRateCode(s)),
     Model("fct_trips",
       Seq("stg_trips_unified", "dim_date", "dim_zone", "dim_payment_type", "dim_rate_code"),
-      (s, sf) => loadedAt(GoldFact.build(s, sf))))
+      GoldFact.fctTripsBody, (s, sf) => loadedAt(GoldFact.build(s, sf))))
+
+  /** dbt's `ref()` compilation: `body` headed by one CTE per model in
+    * `refs` and their transitive deps, each named after its model and in
+    * [[waves]] order, so every CTE follows the ones it reads. A body
+    * with refs is one SELECT, not a WITH of its own. */
+  private[graft] def compile(refs: Seq[String], body: String): String =
+    waves(closure(refs)).flatten.map(m => s"${m.name} AS (\n${m.sql})")
+      .mkString("WITH ", ",\n", s"\n$body")
 
   /** Model `name`'s table for the corpus at `sfDir`: the table a run
     * published for this corpus state, or else a scratch build, read as
@@ -94,17 +109,19 @@ object PipelineRunner {
     * stale or missing upstream), in dependency order. Unknown names
     * fail loudly. */
   def runSubset(spark: SparkSession, sfDir: String, outRoot: String,
-      names: Seq[String]): Map[String, Long] = {
-    if (names.isEmpty) return Map.empty
-    val byName = models.map(m => m.name -> m).toMap
+      names: Seq[String]): Map[String, Long] =
+    runModels(spark, sfDir, outRoot, closure(names))
+
+  /** The models `names` name plus their transitive deps, in [[models]]
+    * order. Unknown names fail loudly. */
+  private def closure(names: Seq[String]): Seq[Model] = {
+    val ms = models
+    val byName = ms.map(m => m.name -> m).toMap
     names.foreach(n => require(byName.contains(n), s"unknown model $n"))
-    val selected = scala.collection.mutable.LinkedHashSet[String]()
-    def close(n: String): Unit = if (!selected.contains(n)) {
-      byName(n).deps.foreach(close)
-      selected += n
-    }
+    val selected = scala.collection.mutable.Set[String]()
+    def close(n: String): Unit = if (selected.add(n)) byName(n).deps.foreach(close)
     names.foreach(close)
-    runModels(spark, sfDir, outRoot, models.filter(m => selected.contains(m.name)))
+    ms.filter(m => selected(m.name))
   }
 
   /** One [[graft.Concurrent.all]] per wave; a failed wave stops the

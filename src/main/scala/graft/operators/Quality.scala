@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   *
   * The catalogue ([[catalogue]]) declares every check once, as a
   * schema.yml block per model: the model, the label its check names
-  * carry, the model's oracle SQL and its checks. A check's name is
-  * `<kind>_<label>_<col>`. [[report]] and [[reportSql]] both fold it,
-  * so a check cannot exist on one side only.
+  * carry and its checks. A check's name is `<kind>_<label>_<col>`.
+  * [[report]] and [[reportSql]] both fold it, so a check cannot exist
+  * on one side only. The oracle reads each model's one SQL body,
+  * compiled once for all six ([[PipelineRunner.compile]]).
   *
   * Each check family maps to a DataFrame pattern (SURVEY §2):
   *  - `not_null`           → conditional-sum over one scan
@@ -70,9 +71,8 @@ object Quality {
     def kind = "relationships"
   }
 
-  /** One model's schema.yml block: its checks, named by `label`, and the
-    * model's oracle SQL, the body the SQL form checks. */
-  case class ModelChecks(model: String, label: String, sql: String, checks: Seq[Check]) {
+  /** One model's schema.yml block: its checks, named by `label`. */
+  case class ModelChecks(model: String, label: String, checks: Seq[Check]) {
     def name(c: Check): String = s"${c.kind}_${label}_${c.col}"
   }
 
@@ -81,11 +81,11 @@ object Quality {
   /** The reference's 32 tests (models/silver/schema.yml,
     * models/gold/schema.yml), one block per model. */
   val catalogue: Seq[ModelChecks] = Seq(
-    ModelChecks("stg_trips_unified", "silver", Silver.silverUnionSql,
+    ModelChecks("stg_trips_unified", "silver",
       Seq("service_type", "order_key", "line_number", "quantity",
         "extended_price", "tax", "ship_ts").map(NotNull) :+
         AcceptedValues("service_type", serviceTypes)),
-    ModelChecks("fct_trips", "fct", GoldFact.fctTripsSql,
+    ModelChecks("fct_trips", "fct",
       Seq("trip_id", "service_type", "pickup_date_sk", "dropoff_date_sk",
         "pickup_zone_sk", "dropoff_zone_sk", "quantity", "extended_price").map(NotNull) ++
         Seq(AcceptedValues("service_type", serviceTypes),
@@ -94,13 +94,13 @@ object Quality {
           Relationship("dropoff_date_sk", "dim_date", "date_sk"),
           Relationship("pickup_zone_sk", "dim_zone", "zone_sk"),
           Relationship("dropoff_zone_sk", "dim_zone", "zone_sk"))),
-    ModelChecks("dim_date", "dim_date", GoldDims.dimDateSql, Seq(
+    ModelChecks("dim_date", "dim_date", Seq(
       NotNull("date_sk"), NotNull("date_actual"), Unique("date_sk"), Unique("date_actual"))),
-    ModelChecks("dim_zone", "dim_zone", GoldDims.dimZoneSql, Seq(
+    ModelChecks("dim_zone", "dim_zone", Seq(
       NotNull("zone_sk"), NotNull("locationid"), Unique("zone_sk"))),
-    ModelChecks("dim_payment_type", "dim_payment_type", GoldDims.dimPaymentTypeSql, Seq(
+    ModelChecks("dim_payment_type", "dim_payment_type", Seq(
       NotNull("status_code"), Unique("status_code"))),
-    ModelChecks("dim_rate_code", "dim_rate_code", GoldDims.dimRateCodeSql, Seq(
+    ModelChecks("dim_rate_code", "dim_rate_code", Seq(
       NotNull("priority_code"), Unique("priority_code"))))
 
   /** `dbt test` CLI analog: print the report, exit non-zero if any
@@ -174,52 +174,44 @@ object Quality {
     catalogue.map(checks(_, tables)).reduce(_ unionByName _).orderBy(col("check_name"))
   }
 
-  // ---- oracle --------------------------------------------------------
+  // ---- oracle: each check over its model's CTE ----------------------
 
-  /** Strip a trailing top-level ORDER BY so a verified-query SQL can be
-    * embedded as a CTE body. */
-  private def noOrder(sql: String): String =
-    sql.replaceAll("(?s)\nORDER BY [^\n]*$", "")
-
-  private def cte(model: String): String = s"q_$model"
-
-  private def nnSql(cte: String, name: String, c: String): String =
+  private def nnSql(model: String, name: String, c: String): String =
     s"""SELECT '$name' AS check_name,
        |       CAST(coalesce(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS violations
-       |FROM $cte""".stripMargin
+       |FROM $model""".stripMargin
 
-  private def uqSql(cte: String, name: String, c: String): String =
+  private def uqSql(model: String, name: String, c: String): String =
     s"""SELECT '$name', CAST(count(*) AS BIGINT)
-       |FROM (SELECT $c FROM $cte GROUP BY $c HAVING count(*) > 1)""".stripMargin
+       |FROM (SELECT $c FROM $model GROUP BY $c HAVING count(*) > 1)""".stripMargin
 
-  private def accSql(cte: String, name: String, c: String, values: Seq[String]): String = {
+  private def accSql(model: String, name: String, c: String, values: Seq[String]): String = {
     val in = values.map(v => s"'$v'").mkString(",")
     s"""SELECT '$name',
        |       CAST(coalesce(sum(CASE WHEN $c NOT IN ($in) THEN 1 ELSE 0 END), 0) AS BIGINT)
-       |FROM $cte""".stripMargin
+       |FROM $model""".stripMargin
   }
 
-  private def relSql(cte: String, name: String, fk: String, toCte: String, toKey: String): String =
+  private def relSql(model: String, name: String, fk: String, to: String, toKey: String): String =
     s"""SELECT '$name', CAST(count(*) AS BIGINT)
-       |FROM $cte WHERE $fk NOT IN (SELECT $toKey FROM $toCte)""".stripMargin
+       |FROM $model WHERE $fk NOT IN (SELECT $toKey FROM $to)""".stripMargin
 
-  /** The 32 checks in DuckDB SQL, rendered from [[catalogue]]. Each
-    * model's CTE body is the SAME string its verified query uses
-    * (embedded via [[noOrder]]), so the check oracle can never drift
-    * from the model oracles. */
+  /** The 32 checks in DuckDB SQL, rendered from [[catalogue]] over the
+    * six models compiled once ([[PipelineRunner.compile]]): each model's
+    * CTE is the body its own oracle compiles, so the check oracle cannot
+    * drift from the model oracles. */
   val reportSql: String = {
     val all = catalogue.flatMap { m =>
-      val q = cte(m.model)
       m.checks.map {
-        case c @ NotNull(k) => nnSql(q, m.name(c), k)
-        case c @ Unique(k) => uqSql(q, m.name(c), k)
-        case c @ AcceptedValues(k, vs) => accSql(q, m.name(c), k, vs)
-        case c @ Relationship(k, to, key) => relSql(q, m.name(c), k, cte(to), key)
+        case c @ NotNull(k) => nnSql(m.model, m.name(c), k)
+        case c @ Unique(k) => uqSql(m.model, m.name(c), k)
+        case c @ AcceptedValues(k, vs) => accSql(m.model, m.name(c), k, vs)
+        case c @ Relationship(k, to, key) => relSql(m.model, m.name(c), k, to, key)
       }
     }
-    s"""WITH ${catalogue.map(m => s"${cte(m.model)} AS (${noOrder(m.sql)})").mkString(",\n")}
-       |SELECT check_name, violations FROM (
-       |${all.mkString("\nUNION ALL\n")})
-       |ORDER BY check_name""".stripMargin
+    PipelineRunner.compile(catalogue.map(_.model),
+      s"""SELECT check_name, violations FROM (
+         |${all.mkString("\nUNION ALL\n")})
+         |ORDER BY check_name""".stripMargin)
   }
 }

@@ -72,7 +72,7 @@ object Silver {
     build(spark, sfDir)
       .orderBy(col("service_type"), col("order_key"), col("line_number"))
 
-  val silverUnionSql: String =
+  private[operators] val silverBody: String =
     """WITH yellow AS (
       |  SELECT 'yellow' AS service_type, l_orderkey AS order_key,
       |         l_linenumber AS line_number, l_partkey AS part_key,
@@ -95,6 +95,7 @@ object Silver {
       |  FROM lineitem WHERE l_linestatus = 'F')
       |SELECT * FROM (SELECT * FROM yellow UNION ALL SELECT * FROM green)
       |WHERE ship_ts IS NOT NULL AND quantity >= 0
-      |  AND extended_price >= 0 AND tax >= 0
-      |ORDER BY service_type, order_key, line_number""".stripMargin
+      |  AND extended_price >= 0 AND tax >= 0""".stripMargin
+
+  val silverUnionSql: String = silverBody + "\nORDER BY service_type, order_key, line_number"
 }

@@ -292,7 +292,8 @@ object Ingest {
         val out = fs.create(p(s"$staging/$name"), true)
         out.write(content.getBytes("UTF-8")); out.close()
       }
-      val result = audit(spark.read.parquet(staging))
+      // read with the written schema: inferring it would cost a job
+      val result = audit(spark.read.schema(df.schema).parquet(staging))
       // every rename's Boolean is CHECKED: a silently failed park would
       // let the staging rename land INSIDE the still-existing dir (HDFS
       // rename-into-directory semantics) and the final cleanup would

@@ -213,25 +213,19 @@ class PipelineRunnerSpec extends SparkSuite
   import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   import graft.functions.Staged
 
-  /** The SQL executions that write fact rows (a `fct_trips*` destination)
-    * while `body` runs. A marker job after `body` flushes the listener
-    * bus: events reach a listener in the order they were posted. */
-  private def factWrites(body: => Unit): Int = {
-    val writes = new java.util.concurrent.atomic.AtomicInteger
+  /** The listener events posted while `body` runs. A marker job after
+    * `body` flushes the listener bus: events reach a listener in the
+    * order they were posted. */
+  private def events(body: => Unit): Seq[SparkListenerEvent] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]
     val flushed = new java.util.concurrent.CountDownLatch(1)
-    val marker = s"fact-writes-${System.nanoTime}"
-    val dest = """Arguments: \S*/fct_trips[\w.\-]*""".r
+    val marker = s"listened-${System.nanoTime}"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           flushed.countDown()
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
-              dest.findFirstIn(s.physicalPlanDescription).isDefined =>
-          writes.incrementAndGet(); ()
-        case _ =>
-      }
+        else seen.add(e): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = seen.add(e): Unit
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -240,8 +234,20 @@ class PipelineRunnerSpec extends SparkSuite
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not flushed")
-      writes.get
+      seen.toArray(Array.empty[SparkListenerEvent]).toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The SQL executions that write fact rows (a `fct_trips*` destination)
+    * while `body` runs. */
+  private def factWrites(body: => Unit): Int = {
+    val dest = """Arguments: \S*/fct_trips[\w.\-]*""".r
+    events(body).count {
+      case s: SparkListenerSQLExecutionStart =>
+        s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+          dest.findFirstIn(s.physicalPlanDescription).isDefined
+      case _ => false
+    }
   }
 
   test("dbt-run analog: DAG materializes in dependency order, replace semantics") {
@@ -384,8 +390,8 @@ class PipelineRunnerSpec extends SparkSuite
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_fail").toString
     try {
       val ms = Seq(
-        PipelineRunner.Model("boom", Nil, (_, _) => sys.error("boom")),
-        PipelineRunner.Model("slow", Nil, (s, _) => { Thread.sleep(2000); s.range(3).toDF() }))
+        PipelineRunner.Model("boom", Nil, "", (_, _) => sys.error("boom")),
+        PipelineRunner.Model("slow", Nil, "", (s, _) => { Thread.sleep(2000); s.range(3).toDF() }))
       val e = intercept[RuntimeException](PipelineRunner.runModels(spark, sf, out, ms))
       assert(e.getMessage == "boom: boom" && e.getCause.getMessage == "boom")
       assert(new java.io.File(s"$out/slow/_SUCCESS").exists(),
@@ -396,10 +402,10 @@ class PipelineRunnerSpec extends SparkSuite
   test("a model that fails mid-write leaves its last good table readable") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_keep").toString
     try {
-      val good = PipelineRunner.Model("trips", Nil, (s, _) => s.range(10).toDF())
+      val good = PipelineRunner.Model("trips", Nil, "", (s, _) => s.range(10).toDF())
       assert(PipelineRunner.runModels(spark, sf, out, Seq(good)) == Map("trips" -> 10L))
       // the rerun's write fails inside a task, after the write has begun
-      val bad = PipelineRunner.Model("trips", Nil, (s, _) =>
+      val bad = PipelineRunner.Model("trips", Nil, "", (s, _) =>
         s.range(10).selectExpr("CAST(raise_error('mid-write') AS BIGINT) AS id"))
       val e = intercept[Exception](PipelineRunner.runModels(spark, sf, out, Seq(bad)))
       assert(e.getMessage.startsWith("trips: "), e.getMessage)
@@ -414,8 +420,38 @@ class PipelineRunnerSpec extends SparkSuite
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline_cancel").toString
     try assertInterruptCancels("sleepy") {
       PipelineRunner.runModels(spark, sf, out,
-        Seq(PipelineRunner.Model("sleepy", Nil, (s, _) => sleepyFrame(s))))
+        Seq(PipelineRunner.Model("sleepy", Nil, "", (s, _) => sleepyFrame(s))))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("models are read with the schema they were written with: no inference job") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_schema").toString
+    try withSfCopy { dir =>
+      PipelineRunner.run(spark, dir, out)
+      // a parquet read without a schema starts one "parquet at ..." job
+      val jobs = events(GoldFact.build(spark, dir)).collect {
+        case j: SparkListenerJobStart => j.stageInfos.map(_.name).mkString(", ")
+      }
+      assert(!jobs.exists(_.contains("parquet at")), jobs.mkString("; "))
+      PipelineRunner.models.foreach { m =>
+        assert(PipelineRunner.table(spark, dir, m.name).schema ==
+          spark.read.parquet(s"$out/${m.name}").schema, m.name)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("the fact and check oracles compile each model's one SQL body, in deps order") {
+    val ms = PipelineRunner.models
+    val order = PipelineRunner.waves(ms).flatten.map(_.name)
+    def cte(m: PipelineRunner.Model) = s"${m.name} AS (\n${m.sql})"
+    for (sql <- Seq(GoldFact.fctTripsSql, Quality.reportSql)) {
+      assert("""\bnull\b""".r.findFirstIn(sql).isEmpty, sql)
+      ms.foreach(m => assert(sql.split(java.util.regex.Pattern.quote(m.sql), -1).length == 2, m.name))
+      val at = ms.map(m => m.name -> sql.indexOf(cte(m))).toMap
+      assert(order.map(at) == order.map(at).sorted && !at.values.exists(_ < 0), at)
+    }
+    val fact = ms.find(_.name == "fct_trips").get.sql
+    assert("""\b(lineitem|nation|region)\b""".r.findFirstIn(fact).isEmpty, fact)
   }
 
   test("topo order puts fct last and respects declared deps") {
